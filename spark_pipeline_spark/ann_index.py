@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_pipeline_spark.gate import local_frame
+
 __all__ = [
     "build_ivf_index",
     "refresh_ivf_index",
@@ -93,7 +95,7 @@ def _empty_search_frame(
             T.StructField("rank", T.IntegerType()),
         ]
     )
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def _rank_probes(
@@ -1138,7 +1140,8 @@ def ivf_index_pq_stats(spark: SparkSession, index_path: str) -> DataFrame:
     if asg is None or cb is None or pq is None:
         cen = _try_read(spark, cen_path)
         ct = cen.schema["cell"].dataType if cen is not None else T.IntegerType()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             T.StructType(
                 [
@@ -1186,7 +1189,8 @@ def ivf_index_stats(spark: SparkSession, index_path: str) -> DataFrame:
 
         cen = _try_read(spark, cen_path)
         ct = cen.schema["cell"].dataType if cen is not None else T.IntegerType()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             T.StructType(
                 [

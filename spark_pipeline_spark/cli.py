@@ -27,6 +27,8 @@ import time
 from collections.abc import Mapping
 from typing import Any
 
+from spark_pipeline_spark.gate import local_frame
+
 # Refresher replay-guard horizon: how many recent delta ids the snapshot
 # remembers. Bounded so the per-row ledger string stays ~O(1 KB) on the
 # (aggregate, rows==groups) snapshot; 64 covers any realistic cron retry
@@ -441,8 +443,8 @@ def main_ann(argv: list[str] | None = None) -> int:
         )
     elif action == "purge":
         if conf.get("ids") is not None:
-            ids = spark.createDataFrame(
-                [(int(i),) for i in conf["ids"]], f"{id_col} long"
+            ids = local_frame(
+                spark, [(int(i),) for i in conf["ids"]], f"{id_col} long"
             )
         elif conf.get("ids-source"):
             ids = load(spark, conf["ids-source"])

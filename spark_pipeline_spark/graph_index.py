@@ -61,6 +61,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_pipeline_spark.gate import local_frame
+
 GRAPH_INDEX_VERSION = 1
 
 _TABLES = ("shingles", "bands", "edges", "components", "communities")
@@ -186,7 +188,8 @@ def build_neardup_graph_index(
     label_propagation(edges, n_iter=lpa_iters).write.parquet(
         f"{staging}/communities"
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(GRAPH_INDEX_VERSION, fingerprint, n, num_hashes, bands,
           float(threshold), lpa_iters)],
         "version INT, fingerprint STRING, n INT, num_hashes INT, "

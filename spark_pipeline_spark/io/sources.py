@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_pipeline_spark.operators.sampling import hash_sample
+from spark_pipeline_spark.session import read_parquet_catalog
 
 
 def read_file(
@@ -36,8 +37,12 @@ def read_file(
 
     Mirrors ``core.py:135-142`` (format default parquet). For CSV, pass an
     explicit ``schema`` DDL string at scale — ``inferSchema`` runs an extra
-    full pass over the data.
+    full pass over the data. Parquet with no schema and no options reads
+    through the session's schema memo (``read_parquet_catalog``), so a
+    repeated load of an unchanged path plans no inference job.
     """
+    if fmt == "parquet" and not schema and not options:
+        return read_parquet_catalog(spark, path)
     reader = spark.read.format(fmt)
     if schema:
         reader = reader.schema(schema)

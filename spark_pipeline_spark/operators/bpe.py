@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_pipeline_spark.gate import gate_rows, local_frame
+
 __all__ = [
     "bpe_train",
     "bpe_encode",
@@ -151,16 +153,14 @@ def bpe_train(
     # corpora far beyond bench scale; past it (or cap=0) the
     # distributed rounds run unchanged.
     if driver_solve_cap:
-        from spark_pipeline_spark.operators.graph import _gate_rows
-
-        head = _gate_rows(sym, driver_solve_cap)
+        head = gate_rows(sym, driver_solve_cap)
         if head is not None:
             merges, final_sym = _bpe_train_driver(
                 [(r["term"], r["n"], r["s"]) for r in head], n_merges
             )
             _free_local_checkpoint(sym)
-            symbols = words.sparkSession.createDataFrame(
-                final_sym, "term string, n bigint, s array<string>"
+            symbols = local_frame(
+                words.sparkSession, final_sym, "term string, n bigint, s array<string>"
             )
             return merges, symbols
 
@@ -259,7 +259,8 @@ def build_bpe_vocab(
     root = path.rstrip("/")
     m_path, s_path, st_path = _vocab_paths(root)
 
-    mdf = spark.createDataFrame(
+    mdf = local_frame(
+        spark,
         [(m["step"], m["pair"], m["n"]) for m in merges],
         "step int, pair string, n long",
     )

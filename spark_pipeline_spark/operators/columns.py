@@ -14,6 +14,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
+from spark_pipeline_spark.gate import local_frame
+
 
 def pandify(df: DataFrame) -> DataFrame:
     """Make a DataFrame pandas/sklearn-friendly.
@@ -118,6 +120,6 @@ def schema_diff(old: DataFrame, new: DataFrame) -> DataFrame:
             if c in n and o[c] != n[c]
         ]
     )
-    return spark.createDataFrame(
-        rows, "col_name string, change string, old_type string, new_type string"
+    return local_frame(
+        spark, rows, "col_name string, change string, old_type string, new_type string"
     )

@@ -24,6 +24,8 @@ only uniqueness tool is the SQL passthrough, ``sparktools/core.py:158-160``).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -37,6 +39,7 @@ __all__ = [
     "shingle_table",
     "jaccard_similarity",
     "minhash_band_keys",
+    "minhash_sql",
     "minhash_index_tables",
     "minhash_near_dup_pairs",
     "minhash_incremental_pairs",
@@ -144,12 +147,7 @@ def shingle_table(
         F.col(id_col).alias("__id"),
         F.split(F.lower(F.trim(_c(text_col))), "\\s+").alias("__w"),
     ).filter(F.size("__w") >= n)
-    w = F.col("__w")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(w) - (n - 1)),
-        lambda i: F.concat_ws(" ", *[F.element_at(w, i + k) for k in range(n)]),
-    )
-    return toks.select("__id", F.array_distinct(grams).alias("__sh"))
+    return toks.select("__id", F.expr(minhash_sql(n).grams).alias("__sh"))
 
 
 def jaccard_similarity(a: Column | str, b: Column | str) -> Column:
@@ -187,53 +185,73 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def _minhash_sig(hashes: Column, a: int, b: int) -> Column:
-    """One MinHash signature value from the pre-hashed shingle array."""
-    return F.array_min(
-        F.transform(
-            hashes,
-            lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(MINHASH_P)),
-        )
+class MinhashSQL(NamedTuple):
+    """SQL text of the MinHash pipeline's expressions, each over a column
+    the previous projection already named (see :func:`minhash_sql`)."""
+
+    grams: str  # __w (token array) → distinct word n-grams
+    hashes: str  # __sh (shingle array) → one md5_int per shingle
+    slots: tuple[str, ...]  # __h (hash array) → one signature value per slot
+    keys: str  # __h → the band keys, '|'-joined signature slices
+
+
+def minhash_sql(
+    n: int = 3,
+    num_hashes: int = 16,
+    bands: int = 4,
+    shingles: str = "__sh",
+    hashes: str = "__h",
+) -> MinhashSQL:
+    """The shingling, hashing and banding expressions as SQL text, one
+    ``F.expr`` each. Built through the Column API, the 16 signature
+    lambdas cost ~200 ms of py4j calls per expression; parsed from text
+    they cost well under a millisecond. The values are those of the
+    DuckDB oracle's ``_sql_minhash_cte``: md5-hash each shingle ONCE,
+    then slot j is ``min((A_j·h + B_j) mod P)`` over the hashes.
+
+    Band keys: ``num_hashes`` slots split into ``bands`` equal bands;
+    each key is the '|'-joined signature slice. Two documents share a
+    band's key iff that slice matches — P(candidate) = 1-(1-J^r)^b for
+    Jaccard J, r = rows per band.
+
+    The n-grams read ``__w``; ``shingles`` / ``hashes`` are the SQL
+    inputs of the other expressions (bound column names by default).
+    Materialize the hash array as its own projection column before the
+    slots read it: every slot references the array, and an inlined
+    expression is re-evaluated per slot (measured 2.5× slower for 16
+    slots at sf0.1)."""
+    if num_hashes % bands:
+        raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
+    grams = (
+        f"array_distinct(transform(sequence(1, size(__w) - {n - 1}), "
+        "i -> concat_ws(' ', "
+        + ", ".join(f"element_at(__w, i + {k})" for k in range(n))
+        + ")))"
+    )
+    md5 = "CAST(conv(substring(md5(CAST(s AS STRING)), 1, 8), 16, 10) AS BIGINT)"
+    slots = tuple(
+        f"array_min(transform({hashes}, h -> pmod(h * {a} + {b}, {MINHASH_P})))"
+        for a, b in minhash_coeffs(num_hashes)
+    )
+    r = num_hashes // bands
+    keys = ", ".join(
+        "concat_ws('|', "
+        + ", ".join(f"CAST({v} AS STRING)" for v in slots[b * r : (b + 1) * r])
+        + ")"
+        for b in range(bands)
+    )
+    return MinhashSQL(
+        grams, f"transform({shingles}, s -> {md5})", slots, f"array({keys})"
     )
 
 
-def minhash_band_keys(
-    shingles: Column | str, num_hashes: int = 16, bands: int = 4
-) -> Column:
-    """Array of LSH band keys for a shingle-set column.
-
-    ``num_hashes`` MinHash values split into ``bands`` equal bands; each
-    band key is the '|'-joined signature slice. Two documents get the
-    same key for a band iff that signature slice matches exactly — the
-    standard banding construction: P(candidate) = 1-(1-J^r)^b for
-    Jaccard J, r = rows per band. Shingles are md5-hashed ONCE; the
-    per-slot values come from the affine family (Catalyst's
-    common-subexpression elimination evaluates the shared hash array a
-    single time).
-    """
-    sh = _c(shingles)
-    if num_hashes % bands:
-        raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
-    hashes = F.transform(sh, lambda s: md5_int(s))
-    return _band_keys_from_hashes(hashes, num_hashes, bands)
-
-
-def _band_keys_from_hashes(hashes: Column, num_hashes: int, bands: int) -> Column:
-    """Band keys from a pre-hashed shingle array.
-
-    Callers that fan one hash array into many signatures should
-    materialize ``hashes`` as its own projection column first: each of
-    the ``num_hashes`` signature slots references the array, and an
-    inlined expression tree is re-evaluated per slot (measured 2.5×
-    slower for 16 slots at sf0.1) — a bound column is evaluated once.
-    """
-    r = num_hashes // bands
-    sig = [_minhash_sig(hashes, a, b) for a, b in minhash_coeffs(num_hashes)]
-    keys = [
-        F.concat_ws("|", *[s.cast("string") for s in sig[b * r : (b + 1) * r]])
-        for b in range(bands)
-    ]
-    return F.array(*keys)
+def minhash_band_keys(shingles: str, num_hashes: int = 16, bands: int = 4) -> Column:
+    """Array of LSH band keys for the shingle-set column named
+    ``shingles`` (see :func:`minhash_sql`). The hash array is inlined
+    into every slot; pipelines that band a whole corpus materialize it
+    first, as :func:`minhash_index_tables` does."""
+    h = minhash_sql(shingles="`" + shingles.replace("`", "``") + "`").hashes
+    return F.expr(minhash_sql(num_hashes=num_hashes, bands=bands, hashes=f"({h})").keys)
 
 
 _MINHASH_META_KEYS = ("minhash_n", "minhash_num_hashes", "minhash_bands")
@@ -304,10 +322,9 @@ def minhash_index_tables(
     """
     from pyspark.storagelevel import StorageLevel
 
-    if num_hashes % bands:
-        raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
     from spark_pipeline_spark.operators.partitions import ensure_min_partitions
 
+    sql = minhash_sql(n, num_hashes, bands)  # raises on a bad banding first
     base = shingle_table(
         ensure_min_partitions(df.select(id_col, text_col)), id_col, text_col, n
     )
@@ -321,15 +338,11 @@ def minhash_index_tables(
     meta = {"minhash_n": n, "minhash_num_hashes": num_hashes, "minhash_bands": bands}
     base = base.select("__id", F.col("__sh").alias("__sh", metadata=meta), *tag_cols)
     base = query_persist(base, StorageLevel.MEMORY_AND_DISK)
-    hashed = base.select(
-        "__id", F.transform("__sh", lambda s: md5_int(s)).alias("__h"), *tag_cols
-    )
+    hashed = base.select("__id", F.expr(sql.hashes).alias("__h"), *tag_cols)
     banded = query_persist(
         hashed.select(
             "__id",
-            F.posexplode(
-                _band_keys_from_hashes(F.col("__h"), num_hashes, bands)
-            ).alias("__band", "__key"),
+            F.posexplode(F.expr(sql.keys)).alias("__band", "__key"),
             *tag_cols,
         ).select(
             "__id",
@@ -812,15 +825,7 @@ def decontaminate(
         toks = frame.select(
             *keep, F.split(F.lower(F.trim(_c(text))), "\\s+").alias("__w")
         ).filter(F.size("__w") >= n)
-        w = F.col("__w")
-        grams = F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - (n - 1)),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(w, i + k) for k in range(n)]
-                ),
-            )
-        )
+        grams = F.expr(minhash_sql(n).grams)
         return toks.select(*keep, F.explode(grams).alias("__g")).select(
             *keep, md5_int(F.col("__g")).alias("__h")
         )

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_pipeline_spark.gate import gate_rows, local_frame
+
 __all__ = [
     "connected_components",
     "connected_components_star",
@@ -72,39 +74,6 @@ def _free_local_checkpoint(
         pass
 
 
-_GATE_PROBE_ROWS = 100_000
-
-
-def _gate_rows(df: DataFrame, cap: int) -> "list | None":
-    """Driver-gate probe: returns the rows when the frame holds ≤
-    ``cap`` of them, else ``None`` (distributed fallback).
-
-    A plain ``take(cap + 1)`` paid a ~cap-row py4j serialization just
-    to learn "too big" on every over-cap graph — measured +37 s at the
-    default 2M cap on a 20M-edge graph (`gate_scale_probe_r16*.json`),
-    a pure tax on exactly the path that matters at 100 TB. A plain
-    count-then-collect removes that but costs +2 scheduler-floor jobs
-    per call on the tiny graphs the bench gates (count + full collect
-    vs take's single 1-partition scan). So: probe with
-    ``take(min(cap, 100k) + 1)`` — tiny frames (every bench gate frame;
-    BPE's sf0.1 vocab is 31 rows) resolve in the SAME single take job
-    as before with the rows already in hand; only frames above the
-    probe fall to a JVM-only ``count()`` (the frame is persisted or
-    checkpointed by every caller, so nothing recomputes) and collect
-    rows only when the driver solve will actually use them. The gate
-    criterion is unchanged (row count ≤ cap) ⇒ path choice — and by the
-    bit-identical-paths property, the result — is unchanged."""
-    probe_n = min(cap, _GATE_PROBE_ROWS)
-    head = df.take(probe_n + 1)
-    if len(head) <= probe_n:
-        return head
-    if len(head) > cap:  # possible only when probe_n == cap
-        return None
-    if df.count() > cap:  # JVM-only; no rows cross the Python boundary
-        return None
-    return df.collect()
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -135,11 +104,12 @@ def connected_components(
         .persist()
     )
     if driver_solve_cap:
-        head = _gate_rows(sym, driver_solve_cap)
+        head = gate_rows(sym, driver_solve_cap)
         if head is not None:
             labels = _union_find_min_labels((r[0], r[1]) for r in head)
             id_type = sym.schema[0].dataType.simpleString()
-            out = edges.sparkSession.createDataFrame(
+            out = local_frame(
+                edges.sparkSession,
                 sorted(labels.items()),
                 f"id {id_type}, component {id_type}",
             )
@@ -262,11 +232,12 @@ def connected_components_star(
         .localCheckpoint(eager=True)
     )
     if driver_solve_cap:
-        head = _gate_rows(e0, driver_solve_cap)
+        head = gate_rows(e0, driver_solve_cap)
         if head is not None:
             labels = _union_find_min_labels((r[0], r[1]) for r in head)
             id_type = e0.schema[0].dataType.simpleString()
-            return edges.sparkSession.createDataFrame(
+            return local_frame(
+                edges.sparkSession,
                 sorted(labels.items()),
                 f"id {id_type}, component {id_type}",
             )
@@ -493,12 +464,13 @@ def merge_components_incremental(
         # fallback (if the cap is exceeded) reuses the same blocks
         # instead of re-running the joins
         contracted = contracted.localCheckpoint(eager=True)
-        head = _gate_rows(contracted, driver_solve_cap)
+        head = gate_rows(contracted, driver_solve_cap)
         if head is not None:
             labels = _union_find_min_labels((r[0], r[1]) for r in head)
             id_type = contracted.schema[0].dataType.simpleString()
-            sub = old_labels.sparkSession.createDataFrame(
-                list(labels.items()),
+            sub = local_frame(
+                old_labels.sparkSession,
+                labels.items(),
                 f"id {id_type}, component {id_type}",
             )
     if sub is None:
@@ -577,11 +549,12 @@ def label_propagation(
     # The collect is bounded (cap rows of two ids, default 2M ≈ 32 MB);
     # past it the distributed rounds run unchanged.
     if driver_solve_cap:
-        head = _gate_rows(sym, driver_solve_cap)
+        head = gate_rows(sym, driver_solve_cap)
         if head is not None:
             labels = _lpa_driver(((r[0], r[1]) for r in head), n_iter)
             id_type = sym.schema[0].dataType.simpleString()
-            out = edges.sparkSession.createDataFrame(
+            out = local_frame(
+                edges.sparkSession,
                 sorted(labels.items()),
                 f"node {id_type}, community {id_type}",
             )
@@ -732,12 +705,13 @@ def label_propagation_incremental(
         )
         relabeled = None
         if driver_solve_cap:
-            head = _gate_rows(sub_edges, driver_solve_cap)
+            head = gate_rows(sub_edges, driver_solve_cap)
             if head is not None:
                 labels = _lpa_driver(((r[0], r[1]) for r in head), n_iter)
                 id_type = sub_edges.schema[0].dataType.simpleString()
-                relabeled = old_communities.sparkSession.createDataFrame(
-                    list(labels.items()),
+                relabeled = local_frame(
+                    old_communities.sparkSession,
+                    labels.items(),
                     f"node {id_type}, community {id_type}",
                 )
         if relabeled is None:

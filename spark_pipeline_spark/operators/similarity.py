@@ -553,6 +553,7 @@ def kcenter_select(
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     from spark_pipeline_spark.functions import l2_norm
+    from spark_pipeline_spark.gate import local_frame
     from spark_pipeline_spark.operators.graph import _free_local_checkpoint
 
     e = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
@@ -567,7 +568,7 @@ def kcenter_select(
     )
     seed = e.orderBy("__id").limit(1).collect()
     if not seed:
-        return e.sparkSession.createDataFrame([], out_schema)
+        return local_frame(e.sparkSession, [], out_schema)
     picked = [(0, seed[0]["__id"], -1.0)]
     cvec = F.array(*[F.lit(float(x)) for x in seed[0]["__v"]])
     state = None
@@ -602,4 +603,4 @@ def kcenter_select(
         # the final state is never read again; free its only copy
         # (no successor to assert — the loop is over)
         _free_local_checkpoint(state)
-    return e.sparkSession.createDataFrame(picked, out_schema)
+    return local_frame(e.sparkSession, picked, out_schema)

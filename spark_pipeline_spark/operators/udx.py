@@ -20,6 +20,7 @@ this module adds the remaining two API shapes users reach for:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,12 +68,13 @@ def geometric_mean_udaf():
     """A pandas GROUPED_AGG UDAF: geometric mean of a positive column.
     Returns the UDF object for use in ``groupBy().agg``."""
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit functionType: this module uses postponed annotations, so
-    # type-hint-based inference would see unresolvable strings
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def geo_mean(v):
+    # Series -> scalar hints make it a grouped-agg UDF. The module uses
+    # postponed annotations, so the hints are strings that pandas_udf
+    # resolves against the module globals: ``pd`` is imported at the top
+    @pandas_udf("double")
+    def geo_mean(v: pd.Series) -> float:
         return float(np.exp(np.log(v.astype("float64")).mean()))
 
     return geo_mean

@@ -26,6 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_pipeline_spark.gate import local_frame
 from spark_pipeline_spark.session import query_persist
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -1404,7 +1405,7 @@ _SQL_SHINGLES3 = (
 
 def _sql_minhash_cte(num_hashes: int, bands: int) -> str:
     """CTEs: shingled docs → per-doc MinHash signature → exploded bands.
-    Mirrors dedup.minhash_band_keys: one md5 per shingle, then the
+    Mirrors dedup.minhash_sql: one md5 per shingle, then the
     md5-derived affine family (A_j·h + B_j) mod P per signature slot."""
     from spark_pipeline_spark.operators.dedup import MINHASH_P, minhash_coeffs
 
@@ -4686,8 +4687,8 @@ def vocab_coverage_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("before_rank"),
     )
     tot = byn.agg(F.sum(F.col("n") * F.col("c")).cast("long").alias("total"))
-    levels = spark.createDataFrame(
-        [(float(v),) for v in _COVERAGE_LEVELS], "coverage double"
+    levels = local_frame(
+        spark, [(float(v),) for v in _COVERAGE_LEVELS], "coverage double"
     )
     thr = F.col("coverage") * F.col("total").cast("double")
     crossing = (
@@ -10423,7 +10424,7 @@ def mmr_diversified_search_documents(spark: SparkSession, sf_dir: str) -> DataFr
         .collect()
     )
     if not cand_rows:
-        return spark.createDataFrame([], "rank int, doc_id long, relevance double")
+        return local_frame(spark, [], "rank int, doc_id long, relevance double")
 
     max_score = max(r["score_raw"] for r in cand_rows)
     rel = {r["doc_id"]: r["score_raw"] / max_score for r in cand_rows}
@@ -10470,7 +10471,7 @@ def mmr_diversified_search_documents(spark: SparkSession, sf_dir: str) -> DataFr
         remaining.discard(pick)
 
     rows = [(k + 1, did, rel[did]) for k, did in enumerate(selected)]
-    out = spark.createDataFrame(rows, "rank int, doc_id long, relevance double")
+    out = local_frame(spark, rows, "rank int, doc_id long, relevance double")
     return out.select("rank", "doc_id", F.round("relevance", 6).alias("relevance"))
 
 
@@ -13488,8 +13489,8 @@ def neardup_threshold_sweep_documents(spark: SparkSession, sf_dir: str) -> DataF
     ver = minhash_near_dup_pairs(
         d, "doc_id", "text", n=3, num_hashes=16, bands=4, threshold=0.0
     ).select("id_a", "id_b", F.col("jaccard").alias("j"))
-    th = spark.createDataFrame(
-        [(x,) for x in (0.5, 0.6, 0.7, 0.8, 0.9)], "threshold double"
+    th = local_frame(
+        spark, [(x,) for x in (0.5, 0.6, 0.7, 0.8, 0.9)], "threshold double"
     )
     nd = d.agg(F.count(F.lit(1)).cast("double").alias("__nd"))
     hit = F.col("j") >= F.col("threshold")
@@ -13579,7 +13580,7 @@ def ann_truncated_dim_recall_report(spark: SparkSession, sf_dir: str) -> DataFra
         .filter(F.col("__r") <= 3)
         .select("query_id", "neighbor_id")
     )
-    dims = spark.createDataFrame([(8,), (16,), (32,)], "d int")
+    dims = local_frame(spark, [(8,), (16,), (32,)], "d int")
     w_ap = Window.partitionBy("d", "query_id").orderBy(
         F.desc("__cos"), F.asc("neighbor_id")
     )
@@ -16445,32 +16446,22 @@ def minhash_estimate_error_report(spark: SparkSession, sf_dir: str) -> DataFrame
     candidate id; output is ONE row."""
     from pyspark.storagelevel import StorageLevel
 
-    from spark_pipeline_spark.functions import md5_int
     from spark_pipeline_spark.operators.dedup import (
-        _band_keys_from_hashes,
-        _minhash_sig,
         jaccard_similarity,
-        minhash_coeffs,
+        minhash_sql,
         shingle_table,
     )
 
     d = t(spark, sf_dir, "documents")
     base = shingle_table(d, "doc_id", "text", n=3)
-    hashed = base.select(
-        "__id", "__sh", F.transform("__sh", lambda s: md5_int(s)).alias("__h")
-    )
-    sig_cols = [
-        _minhash_sig(F.col("__h"), a, b).alias(f"h{j}")
-        for j, (a, b) in enumerate(minhash_coeffs(16))
-    ]
+    sql = minhash_sql(3, 16, 4)
+    hashed = base.select("__id", "__sh", F.expr(sql.hashes).alias("__h"))
+    sig_cols = [F.expr(v).alias(f"h{j}") for j, v in enumerate(sql.slots)]
     sig = query_persist(
         hashed.select("__id", "__sh", *sig_cols), StorageLevel.MEMORY_AND_DISK
     )
     banded = hashed.select(
-        "__id",
-        F.posexplode(_band_keys_from_hashes(F.col("__h"), 16, 4)).alias(
-            "__band", "__key"
-        ),
+        "__id", F.posexplode(F.expr(sql.keys)).alias("__band", "__key")
     )
     cand = (
         banded.alias("a")
@@ -17747,8 +17738,8 @@ def ivf_index_pq_code_drift_report(
     )
     # dense (m, code) grid: a code unused by one batch still contributes
     # its full share to the TVD — absence IS the drift signal
-    grid = spark.createDataFrame(
-        [(m, c) for m in range(2) for c in range(4)], "m int, code int"
+    grid = local_frame(
+        spark, [(m, c) for m in range(2) for c in range(4)], "m int, code int"
     )
     hist = (
         grid.join(per_code, ["m", "code"], "left")
@@ -18577,10 +18568,9 @@ def lsh_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs (the truth set comes from the prefix-filter join, also
     never all-pairs); per-config counts are two groupBy(__cfg)
     aggregates. Output: 3 rows."""
-    from spark_pipeline_spark.functions import md5_int
     from spark_pipeline_spark.operators.dedup import (
-        _band_keys_from_hashes,
         jaccard_similarity,
+        minhash_sql,
         prefix_filter_jaccard_join,
         shingle_table,
     )
@@ -18588,9 +18578,7 @@ def lsh_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     sh = query_persist(shingle_table(d, "doc_id", "text", 3))
     hashed = query_persist(
-        sh.select(
-            "__id", F.transform("__sh", lambda s: md5_int(s)).alias("__h")
-        )
+        sh.select("__id", F.expr(minhash_sql(3).hashes).alias("__h"))
     )
     # truth set reuses the SAME persisted shingle table the banding
     # configs read — without this the prefix-filter join re-shingled the
@@ -18616,7 +18604,7 @@ def lsh_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.flatten(F.array(*[
                 F.transform(
-                    _band_keys_from_hashes(F.col("__h"), 16, bands),
+                    F.expr(minhash_sql(3, 16, bands).keys),
                     lambda k, i: F.struct(
                         F.lit(bands).alias("__cfg"),
                         i.alias("__band"),
@@ -18659,8 +18647,8 @@ def lsh_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dense config axis: a config with zero candidates must still emit
     # its row (coalesce to 0), exactly as the per-config loop did
-    cfg_rows = spark.createDataFrame(
-        [(b, 16 // b) for b in (2, 4, 8)], "bands int, rows_per_band int"
+    cfg_rows = local_frame(
+        spark, [(b, 16 // b) for b in (2, 4, 8)], "bands int, rows_per_band int"
     )
     out = (
         cfg_rows.join(

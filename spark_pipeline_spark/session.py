@@ -144,28 +144,45 @@ _query_cache_lock = threading.Lock()
 # path — so a 63-query bench re-paid it hundreds of times for the same
 # base tables. A production deployment reads through a catalog (Hive
 # metastore / Iceberg manifest) that stores the schema; this memo is
-# that catalog for bare-path reads: infer once per path, then attach
-# the stored schema (`spark.read.schema(s).parquet` plans ZERO jobs).
-# Every action still computes from the parquet bytes — nothing about
-# results, listings, or data is cached; pushdown/pruning are unchanged
-# (schema-first reads verified by the plan-audit tests).
+# that catalog for bare-path reads: infer once per (path, modification
+# time), then attach the stored schema (`spark.read.schema(s).parquet`
+# plans ZERO jobs). Every action still computes from the parquet bytes —
+# nothing about results, listings, or data is cached; pushdown/pruning
+# are unchanged (schema-first reads verified by the plan-audit tests).
 # ---------------------------------------------------------------------------
 
-_parquet_schema_memo: dict[str, object] = {}
+_parquet_schema_memo: dict[str, tuple[int, object]] = {}
+
+
+def _modification_time(spark: SparkSession, path: str) -> int | None:
+    """The Hadoop modification time of ``path`` (ms), or ``None`` when it
+    cannot be stat'ed (missing path, glob, no JVM)."""
+    from py4j.protocol import Py4JError
+
+    try:
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        return int(fs.getFileStatus(hpath).getModificationTime())
+    except (AttributeError, Py4JError):
+        return None
 
 
 def read_parquet_catalog(spark: SparkSession, path: str) -> "DataFrame":
-    """Read a parquet path with the memoized schema (see above). Use for
-    paths whose schema is stable for the process lifetime — base tables
-    and session-keyed artifacts. Evolving-state dirs that a caller may
-    recreate with a DIFFERENT schema at the same path should keep plain
-    ``spark.read.parquet``."""
-    s = _parquet_schema_memo.get(path)
-    if s is None:
-        df = spark.read.parquet(path)
-        _parquet_schema_memo[path] = df.schema
-        return df
-    return spark.read.schema(s).parquet(path)
+    """Read a parquet path with the memoized schema (see above).
+
+    The memo is keyed by the path AND its Hadoop modification time: a
+    write that replaces the directory (``save`` in overwrite mode) or
+    adds or removes files in it changes that time, so the next read
+    infers the schema again, once. A path that cannot be stat'ed is read
+    without the memo."""
+    mtime = _modification_time(spark, path)
+    hit = _parquet_schema_memo.get(path)
+    if mtime is not None and hit is not None and hit[0] == mtime:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if mtime is not None:
+        _parquet_schema_memo[path] = (mtime, df.schema)
+    return df
 
 
 def _same_cache_entry(a: "DataFrame", b: "DataFrame") -> bool:

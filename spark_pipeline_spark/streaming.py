@@ -24,6 +24,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_pipeline_spark.gate import local_frame
+
 __all__ = [
     "stream_enrich",
     "stream_upsert_sink",
@@ -792,15 +794,13 @@ def stream_dedup_lsh_sink(
     collisions only.
     """
     from spark_pipeline_spark.operators.dedup import (
-        _band_keys_from_hashes,
         jaccard_similarity,
+        minhash_sql,
         shingle_table,
     )
-    from spark_pipeline_spark.functions import md5_int
     from spark_pipeline_spark.operators.partitions import ensure_min_partitions
 
-    if num_hashes % bands:
-        raise ValueError(f"num_hashes={num_hashes} not divisible by bands={bands}")
+    sql = minhash_sql(n, num_hashes, bands)  # raises on a bad banding first
 
     spark = stream.sparkSession
     bands_path = index_path.rstrip("/") + "/bands"
@@ -828,15 +828,11 @@ def stream_dedup_lsh_sink(
         # materialize the hash array as its own projection before fanning
         # it into the signature slots — an inlined transform re-evaluates
         # per slot (dedup.py: measured 2.5× for 16 slots)
-        hashed = base.select(
-            "__id", F.transform("__sh", lambda s: md5_int(s)).alias("__h")
-        )
+        hashed = base.select("__id", F.expr(sql.hashes).alias("__h"))
         banded = pin(
             hashed.select(
                 "__id",
-                F.posexplode(
-                    _band_keys_from_hashes(F.col("__h"), num_hashes, bands)
-                ).alias("__band", "__key"),
+                F.posexplode(F.expr(sql.keys)).alias("__band", "__key"),
             ).select(
                 "__id", F.col("__band").alias("__band", metadata=_idx_meta), "__key"
             )
@@ -1377,7 +1373,7 @@ def stream_ann_refresh_sink(
                 0 if existing is None
                 else existing.agg(F.max("batch")).first()[0] + 1
             )
-            spark.createDataFrame([(base,)], "base int").coalesce(
+            local_frame(spark, [(base,)], "base int").coalesce(
                 1
             ).write.mode("overwrite").parquet(root + "/stream_base")
         else:

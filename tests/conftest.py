@@ -9,17 +9,23 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     from spark_pipeline_spark import get_session
 
     # driver.memory must be set BEFORE the JVM launches (getOrCreate
     # passes it to spark-submit): the default 1g cannot hold a full
     # registry sweep at sf0.1 in one session — give the local JVM real
-    # headroom like a production driver would have.
+    # headroom like a production driver would have. The warehouse and
+    # Derby's home go to a temp dir, not the working directory.
+    scratch = tmp_path_factory.mktemp("spark")
     spark = get_session(
         "tests",
         shuffle_partitions=8,
-        conf={"spark.driver.memory": "8g"},
+        conf={
+            "spark.driver.memory": "8g",
+            "spark.sql.warehouse.dir": str(scratch / "warehouse"),
+            "spark.driver.extraJavaOptions": f"-Dderby.system.home={scratch}",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     yield spark

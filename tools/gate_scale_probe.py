@@ -5,7 +5,7 @@ r15 cap-gate change).
 Builds a deterministic random graph whose DISTINCT edge count exceeds
 ``driver_solve_cap`` (default 2M), so `connected_components_star` /
 `label_propagation` must fall through their gate probe (count-based,
-`_gate_rows`) to the unchanged distributed rounds. Three runs per
+`gate.gate_rows`) to the unchanged distributed rounds. Three runs per
 operator:
 
 - 32 cores, default cap   (gate probes, then hands back)

@@ -143,6 +143,8 @@ def main() -> int:
     ap.add_argument("--json", default="")
     ap.add_argument("--skip-build", action="store_true")
     args = ap.parse_args()
+    if args.repeat < 1:
+        ap.error("--repeat must be at least 1")
     out_dir = args.out or f"/tmp/spark_graft_winnow_synth_{args.replicas}x"
 
     from spark_pipeline_spark import get_session
