@@ -1,6 +1,6 @@
 """Persisted IVF index lifecycle — the ANN analogue of the streaming
 LSH dedup index (`streaming.py`): durable (centroids, cell assignments,
-int8 codes) tables with staged swap, an incremental refresh verb, a
+int8 codes) tables committed by rename, an incremental refresh verb, a
 right-to-be-forgotten purge path, and a search entry point that reads
 ONLY the persisted state.
 
@@ -30,10 +30,10 @@ Why this shape at 100 TB:
   `embedding_quantize_int8`'s scheme so the two reports reconcile); a
   memory-tight reranker scans codes and only fetches float vectors for
   the short list.
-- ``centroids`` is rewritten via a STAGED copy (write ``__staging``,
-  rewrite final from it, delete staging — the `compact_parquet` /
-  `purge_ids_from_dedup_index` crash discipline) because unlike the
-  batch dirs it is replaced in place.
+- a build or rebuild replaces the whole root through `io.commit`
+  (every table written once under a staging root, then one rename
+  pair), so ``centroids`` and the batch tables never mix generations;
+  a purge commits each table the same way.
 - Refresh NEVER retrains centroids per batch (assignment must stay
   comparable across batches); instead it returns the per-cell
   growth-skew report (`ivf_incremental_assign_embeddings`'s logic made
@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_pipeline_spark.gate import local_frame
+from spark_pipeline_spark.io.commit import commit, open_table, require_jvm
 
 __all__ = [
     "build_ivf_index",
@@ -64,12 +65,6 @@ __all__ = [
 def _paths(index_path: str) -> tuple[str, str, str]:
     root = index_path.rstrip("/")
     return root + "/centroids", root + "/assignments", root + "/codes"
-
-
-def _try_read(spark: SparkSession, path: str) -> DataFrame | None:
-    from spark_pipeline_spark.streaming import _try_read_parquet
-
-    return _try_read_parquet(spark, path)
 
 
 def _empty_search_frame(
@@ -357,18 +352,27 @@ def build_ivf_index(
     write all three tables. The full corpus lands as ``batch=0``;
     refreshes append ``batch=1..n``.
 
-    A rebuild OVERWRITES the whole index (centroids via staging, batch
-    dirs by delete-then-write of the parent) — it is the resplit story:
-    when refresh reports persistent skew, rebuild with larger
-    ``k_cells``.
+    A rebuild REPLACES the whole index root in one commit
+    (`io.commit.commit`: every table is written once under a staging
+    root, then one rename pair swaps the roots), so the tables never
+    mix generations — it is the resplit story: when refresh reports
+    persistent skew, rebuild with larger ``k_cells``.
     """
-    from spark_pipeline_spark.operators.similarity import ivf_assign, kmeans_fit
-    from spark_pipeline_spark.streaming import _hadoop_delete
-
-    cen_path, asg_path, code_path = _paths(index_path)
-
     base = df.select(F.col(id_col).alias("vec_id"),
                      F.col(vec_col).cast("array<double>").alias("embedding"))
+    return _build(spark, base, index_path, k_cells, iters, pq_m, pq_k)
+
+
+def _build(
+    spark: SparkSession, base: DataFrame, index_path: str, k_cells: int,
+    iters: int, pq_m: int | None, pq_k: int, on_staged=None,
+) -> dict:
+    """`build_ivf_index` over a ``(vec_id, embedding)`` frame;
+    ``on_staged`` runs after every table is staged, before the commit
+    renames anything."""
+    from spark_pipeline_spark.operators.similarity import ivf_assign, kmeans_fit
+
+    require_jvm(spark, "build_ivf_index")
     w = F.col("vec_id")
     seeds = (
         base.orderBy(w).limit(k_cells)
@@ -378,10 +382,7 @@ def build_ivf_index(
     # ONE eager checkpoint materializes the (tiny, ≤ k_cells-row)
     # centroid frame: the parquet write, the assignment broadcast, and
     # the dim/emptiness probe all reuse it instead of each re-running
-    # the corpus sort-limit (or re-reading the written file back). This
-    # also unchains the batch writes from the centroids COMMIT — they
-    # only need the centroid VALUES (doubles round-trip parquet
-    # losslessly, so reading the file back was value-identical anyway).
+    # the corpus sort-limit.
     cen = cen.localCheckpoint(eager=True)
     # An empty corpus must refuse loudly: a centroid-less index silently
     # drops every vector a later refresh assigns (ivf_assign against zero
@@ -397,43 +398,15 @@ def build_ivf_index(
         )
     dim = len(probe[0]["centroid"])
     if pq_m is not None and dim % pq_m:
-        # validate BEFORE any table is written — a failed build must not
-        # leave a half-replaced index behind. dim is known from the probe
-        # row, so this guard needs nothing the centroids write produces
-        # (hoisted above it: a bad pq_m used to replace the live centroids
-        # via staged swap and THEN abort, leaving new centroids over old
-        # assignments/codes until the next successful build).
+        # validated before anything is staged: a failed build leaves the
+        # live index untouched
         raise ValueError(
             f"build_ivf_index: dim {dim} not divisible by pq_m={pq_m}"
         )
 
-    # centroids: staged swap (replace-in-place table) — but only when a
-    # live copy exists to protect; a FRESH build (no cen_path yet, e.g.
-    # rebuild_ivf_index staging a whole new index root) writes directly,
-    # skipping a write+read+rewrite round-trip per table (VERDICT r14
-    # item 5: the lifecycle reports pay this 2× per rebuild)
-    from spark_pipeline_spark.streaming import hadoop_path_exists
-
-    def write_centroids() -> None:
-        if hadoop_path_exists(spark, cen_path):
-            staging = cen_path + "__staging"
-            cen.coalesce(1).write.mode("overwrite").parquet(staging)
-            spark.read.parquet(staging).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(cen_path)
-            _hadoop_delete(spark, staging)
-        else:
-            cen.coalesce(1).write.parquet(cen_path)
-
     assigned = ivf_assign(
         base, cen, "vec_id", "embedding", cell_id="cell", cell_vec="centroid",
     )
-    # a rebuild owns the whole history: drop any previous batch dirs
-    pq_cb_path, pq_codes_path = _pq_paths(index_path)
-    _hadoop_delete(spark, asg_path)
-    _hadoop_delete(spark, code_path)
-    _hadoop_delete(spark, pq_codes_path)
-
     # PQ is an OPT-IN layer (pq_m set): the codebook trains once at
     # build (M·K subvector rows, seeded like the centroids) and stays
     # FIXED across refreshes — codes must stay comparable across the
@@ -441,107 +414,57 @@ def build_ivf_index(
     # encode pass costs an extra write job a float/int8-only index never
     # needs (it showed up as a measured +75% on the lifecycle bench when
     # it briefly defaulted on).
-    def write_codebook(codebook: DataFrame) -> None:
-        if hadoop_path_exists(spark, pq_cb_path):
-            cb_staging = pq_cb_path + "__staging"
-            codebook.coalesce(1).write.mode("overwrite").parquet(cb_staging)
-            spark.read.parquet(cb_staging).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(pq_cb_path)
-            _hadoop_delete(spark, cb_staging)
-        else:
-            codebook.coalesce(1).write.parquet(pq_cb_path)
-
-    # Concurrent independent job chains (guide §2.6): the centroids
-    # write depends only on the checkpointed `cen`; the batch chain
-    # (count + assignments + codes writes) only on `assigned`; the PQ
-    # chain (codebook write, then encode from the SAME persisted
-    # assigned frame) only on `base` + `assigned`. A driver submits
-    # sequential actions only because the code calls them sequentially —
-    # overlapping lets each chain's tasks back-fill the others'
-    # scheduling/commit tails (on a cluster: straggler gaps).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as cen_pool:
-        fut_cen = cen_pool.submit(write_centroids)
-        try:
-            if pq_m is not None:
-                codebook = _pq_train_codebook(base, pq_m, pq_k, dim)
-
-                def chain_pq(n_rows: int) -> None:
-                    write_codebook(codebook)
-                    _pq_encode(
-                        assigned, codebook, dim, m_sub=pq_m
-                    ).write.mode("overwrite").parquet(
-                        f"{pq_codes_path}/batch=0"
-                    )
-
-                n = _write_batch(
-                    spark, assigned, asg_path, code_path, 0,
-                    concurrent_with=chain_pq,
-                )
-            else:
-                _hadoop_delete(spark, pq_cb_path)
-                n = _write_batch(
-                    spark, assigned, asg_path, code_path, batch_id=0
-                )
-        finally:
-            fut_cen.result()
-    return {"n_vectors": n, "k_cells": k_cells, "batch_id": 0,
+    pq = None
+    if pq_m is not None:
+        pq = (_pq_train_codebook(base, pq_m, pq_k, dim), dim, pq_m)
+    info = {"n_vectors": 0, "k_cells": k_cells, "batch_id": 0,
             "pq_m": pq_m, "pq_k": pq_k if pq_m is not None else None}
+
+    def write(root: str) -> None:
+        cen.coalesce(1).write.parquet(_paths(root)[0])
+        if pq is not None:
+            pq[0].coalesce(1).write.parquet(_pq_paths(root)[0])
+        info["n_vectors"] = _write_batch(spark, assigned, root, 0, pq)
+        if on_staged is not None:
+            on_staged()
+
+    commit(spark, index_path, write)
+    return info
 
 
 def _write_batch(
     spark: SparkSession,
     assigned: DataFrame,
-    asg_path: str,
-    code_path: str,
+    index_path: str,
     batch_id: int,
-    concurrent_with=None,
+    pq: tuple[DataFrame, int, int] | None,
 ) -> int:
-    """Write one batch's assignment + code rows under their own
-    ``batch=<id>`` directories — idempotent by path (a replay of the
-    same batch overwrites the same directories and nothing else).
-
-    ``concurrent_with``: optional callable ``(n_rows) -> None`` run in
-    the same pool alongside the two writes — for a caller's independent
-    job chain that reads the SAME persisted ``assigned`` frame (e.g.
-    the PQ encode), so it back-fills the write jobs' commit tails
-    (guide §2.6) instead of running serially after them. It is invoked
-    after the count, i.e. the frame is already materialized, and the
-    frame stays persisted until it returns."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    """Write one batch's assignment, int8 code and — with ``pq`` =
+    ``(codebook, dim, m_sub)`` — PQ code rows under their own
+    ``batch=<id>`` directories, idempotent by path (a replay of the
+    same batch overwrites the same directories and nothing else). The
+    tables agree because they read ONE persisted frame; an empty batch
+    encodes no PQ codes."""
+    _, asg_path, code_path = _paths(index_path)
     assigned = assigned.persist()
     try:
-        # count materializes the persist ONCE; the chains below then
-        # read the cached blocks and are independent of each other, so
-        # they run concurrently (guide §2.6) — each is its own job chain
-        # against the same cached frame.
         n = assigned.count()
-
-        def write_assignments() -> None:
-            assigned.write.mode("overwrite").partitionBy("cell").parquet(
-                f"{asg_path}/batch={batch_id}"
-            )
-
-        def write_codes() -> None:
-            # scale is persisted at FULL precision: readers reconstruct
-            # x ≈ code/scale, and the parity oracles reconstruct with the
-            # unrounded 127/max|x| — rounding here would drift the 6th
-            # decimal of downstream round(avg(err),6) cells. Round only
-            # in display/report columns, never in the stored value.
-            _int8_codes(assigned, "embedding").select(
-                "vec_id", "cell", "codes", "scale"
-            ).write.mode("overwrite").parquet(f"{code_path}/batch={batch_id}")
-
-        chains = [write_assignments, write_codes]
-        if concurrent_with is not None:
-            chains.append(lambda: concurrent_with(n))
-        with ThreadPoolExecutor(max_workers=len(chains)) as pool:
-            futs = [pool.submit(c) for c in chains]
-            for f in futs:
-                f.result()
+        assigned.write.mode("overwrite").partitionBy("cell").parquet(
+            f"{asg_path}/batch={batch_id}"
+        )
+        # scale is persisted at FULL precision: readers reconstruct
+        # x ≈ code/scale, and the parity oracles reconstruct with the
+        # unrounded 127/max|x| — rounding here would drift the 6th
+        # decimal of downstream round(avg(err),6) cells. Round only
+        # in display/report columns, never in the stored value.
+        _int8_codes(assigned, "embedding").select(
+            "vec_id", "cell", "codes", "scale"
+        ).write.mode("overwrite").parquet(f"{code_path}/batch={batch_id}")
+        if pq is not None and n:
+            codebook, dim, m_sub = pq
+            _pq_encode(assigned, codebook, dim, m_sub=m_sub).write.mode(
+                "overwrite"
+            ).parquet(f"{_pq_paths(index_path)[1]}/batch={batch_id}")
     finally:
         assigned.unpersist()
     return n
@@ -570,9 +493,14 @@ def refresh_ivf_index(
     same directory overwritten)."""
     from spark_pipeline_spark.operators.similarity import ivf_assign
 
-    cen_path, asg_path, code_path = _paths(index_path)
-    cen = spark.read.parquet(cen_path)
-    existing = _try_read(spark, asg_path)
+    cen_path, asg_path, _ = _paths(index_path)
+    cen = open_table(spark, cen_path)
+    if cen is None:
+        raise ValueError(
+            f"refresh_ivf_index: no index at {index_path!r} — build it "
+            "with build_ivf_index first"
+        )
+    existing = open_table(spark, asg_path)
     if batch_id is None:
         batch_id = (
             0 if existing is None
@@ -587,38 +515,22 @@ def refresh_ivf_index(
 
     # PQ codes for the batch, against the FIXED persisted codebook (an
     # index built before the PQ layout existed has none — skip, the
-    # documented backward-compat posture; rebuild to add PQ). Encoded
-    # from the SAME persisted frame the assignment write reads — the
-    # two tables are consistent because they share one materialization,
-    # and the encode chain runs CONCURRENTLY with the batch writes
-    # (guide §2.6) instead of serially after the assignment commit.
-    # m_sub and dim come from the codebook in ONE job (`_pq_meta`),
-    # replacing the former centroids-head + max(m)-discovery pair of
-    # scheduler-floor jobs. An empty batch (n == 0) encodes nothing —
-    # same on-disk result as the former committed-directory re-read.
-    pq_cb_path, pq_codes_path = _pq_paths(index_path)
-    codebook = _try_read(spark, pq_cb_path)
-    chain_pq = None
+    # documented backward-compat posture; rebuild to add PQ), encoded
+    # from the same persisted frame the assignment write reads. m_sub
+    # and dim come from the codebook in ONE job (`_pq_meta`).
+    codebook = open_table(spark, _pq_paths(index_path)[0])
+    pq = None
     if codebook is not None:
         m_sub, _, dim = _pq_meta(codebook)
-
-        def chain_pq(n_rows: int) -> None:
-            if n_rows:
-                _pq_encode(assigned, codebook, dim, m_sub=m_sub).write.mode(
-                    "overwrite"
-                ).parquet(f"{pq_codes_path}/batch={batch_id}")
-
-    _write_batch(
-        spark, assigned, asg_path, code_path, batch_id,
-        concurrent_with=chain_pq,
-    )
+        pq = (codebook, dim, m_sub)
+    _write_batch(spark, assigned, index_path, batch_id, pq)
 
     # growth-skew report: persisted history (excluding this batch — a
     # replay must not count its own half-written rows as "existing")
     # vs the batch just written, read back from its committed directory.
     # An EMPTY batch (cron tick with no new data) writes no data files,
     # so its dir can't be re-read — the zero-new report is built directly.
-    new_batch = _try_read(spark, f"{asg_path}/batch={batch_id}")
+    new_batch = open_table(spark, f"{asg_path}/batch={batch_id}")
     if new_batch is not None:
         new_counts = new_batch.groupBy("cell").agg(
             F.count(F.lit(1)).alias("n_new")
@@ -681,25 +593,17 @@ def rebuild_ivf_index(
     current corpus out of the persisted ``assignments/`` tables (all
     batches — i.e. exactly the vectors the index holds today, post-
     refresh, post-purge), train fresh centroids on it, reassign,
-    re-encode int8 and PQ, and swap the WHOLE index in one staged pass.
+    re-encode int8 and PQ, and replace the WHOLE index root in one
+    commit (`build_ivf_index`'s).
 
-    Swap discipline (the purge engine's, upgraded from rewrite to
-    rename): the complete new index — every sub-table — is built under
-    ``<index_path>__rebuild_staging`` while the LIVE tables are never
-    touched, so in-flight searches keep reading a fully consistent old
-    index for the entire (expensive) retrain. Commit is then one
-    RENAME per sub-table (milliseconds, no data movement): live →
-    ``__old``, staged → live, delete ``__old``. A crash mid-commit
-    leaves each table either wholly old or wholly new — search stays
-    well-formed (worst case: centroids from the new build with an old
-    batch layout for one read; re-running the rebuild heals — a crash
-    that left no live ``assignments/`` is recovered explicitly by
-    finishing the interrupted rename from ``assignments__old`` or the
-    completed staging dir before the corpus read). A leftover staging
-    directory from a crashed run is clobbered on the next call, and
-    every commit rename's success flag is checked: a failed
-    staged→live rename rolls the live table back and raises instead of
-    deleting the only remaining copy.
+    The complete new index is written under a staging root while the
+    LIVE tables are never touched, so in-flight searches keep reading
+    a fully consistent old index for the entire (expensive) retrain;
+    the commit is one rename pair (no data movement). A crash at any
+    point leaves either the old or the new root, and the next open of
+    the index finishes an interrupted commit (`io.commit`). The commit
+    replaces everything under the root: a `stream_ann_refresh_sink`'s
+    ``stream_base`` marker is re-derived on its next batch.
 
     Parameters default to "keep the index's current shape": ``k_cells``
     None → the live centroid count (pass a larger value on persistent
@@ -710,7 +614,8 @@ def rebuild_ivf_index(
     bit-identical to `build_ivf_index` on the same corpus and
     parameters — the invariant the tests hash-verify. ``on_staged``
     (optional callable, no args) runs after staging completes and
-    before the first live table is touched — the quiesce/verify hook.
+    before the live root is touched — the quiesce/verify hook.
+    ``swapped`` lists the tables the committed root holds.
 
     Caller contract: quiesce refresh/purge writers for the swap (same
     as compaction); searches need no quiesce. vec_ids are unique
@@ -718,57 +623,19 @@ def rebuild_ivf_index(
     needs no dedup. Scale: one full-corpus scan + the standard build
     (centroids broadcast, corpus never shuffles except the k-means
     aggregates); the commit moves zero data bytes."""
-    from spark_pipeline_spark.streaming import (
-        _hadoop_delete,
-        _hadoop_rename,
-        hadoop_path_exists,
-    )
+    from spark_pipeline_spark.session import cached
 
     root = index_path.rstrip("/")
     cen_path, asg_path, _ = _paths(root)
-    pq_cb_path, _ = _pq_paths(root)
-
-    def heal(live_path: str, name: str) -> bool:
-        """Finish an interrupted staged-swap rename for one sub-table.
-        A crash between rename(live -> __old) and rename(staged ->
-        live) leaves no live copy — the data sits wholly in ``__old``
-        (interrupted swap) or wholly in the completed staging dir
-        (interrupted commit). Healing happens BEFORE any read and
-        BEFORE the staging clobber below, so a lazy scan never points
-        at a directory this run will delete or rebuild (ADVICE r13;
-        extended to centroids/pq_codebook per ADVICE r14 — the
-        centroids swap runs FIRST in staged_swap_commit, so its crash
-        window used to leave ``k_cells=None`` reads with a raw
-        AnalysisException and a mid-swap codebook silently dropped the
-        PQ layer)."""
-        if hadoop_path_exists(spark, live_path):
-            return True
-        for leftover in (live_path + "__old", f"{root}__rebuild_staging/{name}"):
-            if hadoop_path_exists(spark, leftover):
-                if not _hadoop_rename(spark, leftover, live_path):
-                    raise IOError(
-                        f"rebuild_ivf_index: crash-recovery rename "
-                        f"{leftover} -> {live_path} failed — restore it "
-                        f"manually before re-running"
-                    )
-                return True
-        return False
-
-    heal(asg_path, "assignments")
-    corpus = _try_read(spark, asg_path)
+    corpus = open_table(spark, asg_path)
     if corpus is None:
         raise ValueError(
-            f"rebuild_ivf_index: no assignments under {root} (and no "
-            f"crash leftovers at assignments__old or __rebuild_staging) "
-            f"— nothing to rebuild (build_ivf_index creates a new index)"
+            f"rebuild_ivf_index: no assignments under {root} — nothing to "
+            f"rebuild (build_ivf_index creates a new index)"
         )
-    corpus = corpus.select("vec_id", "embedding")
-
     if k_cells is None:
-        heal(cen_path, "centroids")
-        k_cells = spark.read.parquet(cen_path).count()
-    heal(pq_cb_path, "pq_codebook")
-    codebook = _try_read(spark, pq_cb_path)
+        k_cells = open_table(spark, cen_path).count()
+    codebook = open_table(spark, _pq_paths(root)[0])
     if pq_m is None:
         if codebook is not None:
             agg = codebook.agg(F.max("m"), F.max("code")).first()
@@ -777,35 +644,18 @@ def rebuild_ivf_index(
                 pq_k = int(agg[1]) + 1
     elif pq_m == 0:
         pq_m = None
-    if pq_m is not None and pq_k is None:
-        pq_k = 4
-
-    staging_root = root + "__rebuild_staging"
-    _hadoop_delete(spark, staging_root)  # clobber a crashed run's leftovers
     # the corpus frame is scanned several times inside the build (seed
     # selection, assignment, PQ codebook training) and here it is a
     # parquet re-read of the live assignments — cache it for the build's
-    # duration instead of re-scanning per pass (VERDICT r14 item 5)
-    from spark_pipeline_spark.session import cached
-
-    with cached(corpus) as corpus_cached:
-        info = build_ivf_index(
-            spark, corpus_cached, staging_root, k_cells=k_cells, iters=iters,
-            pq_m=pq_m, **({"pq_k": pq_k} if pq_k is not None else {}),
+    # duration instead of re-scanning per pass
+    with cached(corpus.select("vec_id", "embedding")) as corpus_cached:
+        info = _build(
+            spark, corpus_cached, root, k_cells, iters, pq_m,
+            4 if pq_k is None else pq_k, on_staged,
         )
-
-    if on_staged is not None:
-        on_staged()
-
-    # Commit: checked per-table renames with rollback-on-failure
-    # (streaming.staged_swap_commit — ADVICE r13 discipline).
-    from spark_pipeline_spark.streaming import staged_swap_commit
-
-    swapped = staged_swap_commit(
-        spark, root, staging_root,
-        ("centroids", "assignments", "codes", "pq_codebook", "codes_pq"),
-        op="rebuild_ivf_index",
-    )
+    swapped = ["centroids", "assignments", "codes"]
+    if pq_m is not None:
+        swapped += ["pq_codebook", "codes_pq"]
     return {**info, "swapped": swapped}
 
 
@@ -815,53 +665,28 @@ def purge_ids_from_ivf_index(
     """Right-to-be-forgotten for the ANN state (the embeddings gap the
     relational `delete_propagation_customers` and LSH
     `purge_ids_from_dedup_index` paths already cover): remove every
-    trace of the given vec_ids from ``assignments/`` and ``codes/``.
-    A purged vector stops being retrievable — `ivf_index_search` can
-    never return it because its row is gone from the only table search
-    reads. Centroids are NOT rewritten (they are aggregates, not
-    member data — the standard GDPR posture for model-side state; a
-    rebuild refreshes them).
+    trace of the given vec_ids from ``assignments/``, ``codes/`` and
+    ``codes_pq/``. A purged vector stops being retrievable —
+    `ivf_index_search` can never return it because its row is gone from
+    the only table search reads. Centroids are NOT rewritten (they are
+    aggregates, not member data — the standard GDPR posture for
+    model-side state; a rebuild refreshes them).
 
-    Same staged-copy crash discipline as the LSH purge: survivors are
-    written to ``__purge_staging`` first, the live table is rewritten
-    from it (parquet reads are lazy — overwriting the path being read
-    would corrupt it), partition layout (batch, cell) preserved."""
-    from spark_pipeline_spark.streaming import _hadoop_delete
+    Same engine as the LSH purge
+    (`io.maintenance.purge_ids_from_tables`): each table commits once
+    through a rename, partition layout (batch, cell) preserved."""
+    from spark_pipeline_spark.io.maintenance import purge_ids_from_tables
 
     _, asg_path, code_path = _paths(index_path)
-    _, pq_codes_path = _pq_paths(index_path)
-    tomb = ids.toDF("__purge_id")
-    out = {}
-    for name, path, parts in (
-        ("assignments", asg_path, ["batch", "cell"]),
-        ("codes", code_path, ["batch"]),
-        ("codes_pq", pq_codes_path, ["batch"]),
-    ):
-        df = _try_read(spark, path)
-        if df is None:
-            out[f"{name}_removed"] = 0
-            continue
-        before = df.count()
-        survivors = df.join(
-            tomb, df["vec_id"] == tomb["__purge_id"], "left_anti"
-        ).persist()
-        try:
-            n_surv = survivors.count()
-            if n_surv == 0:
-                _hadoop_delete(spark, path)
-            else:
-                staging = path.rstrip("/") + "__purge_staging"
-                survivors.write.mode("overwrite").partitionBy(*parts).parquet(
-                    staging
-                )
-                spark.read.parquet(staging).write.mode("overwrite").partitionBy(
-                    *parts
-                ).parquet(path)
-                _hadoop_delete(spark, staging)
-        finally:
-            survivors.unpersist()
-        out[f"{name}_removed"] = before - n_surv
-    return out
+    return purge_ids_from_tables(
+        spark,
+        [
+            ("assignments", asg_path, "vec_id", ["batch", "cell"]),
+            ("codes", code_path, "vec_id", ["batch"]),
+            ("codes_pq", _pq_paths(index_path)[1], "vec_id", ["batch"]),
+        ],
+        ids,
+    )
 
 
 def ivf_index_search(
@@ -889,8 +714,8 @@ def ivf_index_search(
     from spark_pipeline_spark.operators.similarity import cosine_similarity
 
     cen_path, asg_path, _ = _paths(index_path)
-    cen_raw = _try_read(spark, cen_path)
-    asg_raw = _try_read(spark, asg_path)
+    cen_raw = open_table(spark, cen_path)
+    asg_raw = open_table(spark, asg_path)
     if cen_raw is None or asg_raw is None:
         return _empty_search_frame(spark, queries, query_id, cen_raw)
     q = queries.select(
@@ -947,9 +772,9 @@ def ivf_index_search_int8(
     from spark_pipeline_spark.operators.similarity import cosine_similarity
 
     cen_path, asg_path, code_path = _paths(index_path)
-    cen_raw = _try_read(spark, cen_path)
-    code_raw = _try_read(spark, code_path)
-    asg_raw = _try_read(spark, asg_path)
+    cen_raw = open_table(spark, cen_path)
+    code_raw = open_table(spark, code_path)
+    asg_raw = open_table(spark, asg_path)
     if cen_raw is None or code_raw is None or asg_raw is None:
         return _empty_search_frame(spark, queries, query_id, cen_raw)
     q = _int8_codes(
@@ -1053,10 +878,10 @@ def ivf_index_search_pq(
 
     cen_path, asg_path, _ = _paths(index_path)
     pq_cb_path, pq_codes_path = _pq_paths(index_path)
-    cen_raw = _try_read(spark, cen_path)
-    cb = _try_read(spark, pq_cb_path)
-    pq_raw = _try_read(spark, pq_codes_path)
-    asg_raw = _try_read(spark, asg_path)
+    cen_raw = open_table(spark, cen_path)
+    cb = open_table(spark, pq_cb_path)
+    pq_raw = open_table(spark, pq_codes_path)
+    asg_raw = open_table(spark, asg_path)
     if cen_raw is None or cb is None or pq_raw is None or asg_raw is None:
         return _empty_search_frame(spark, queries, query_id, cen_raw)
 
@@ -1134,11 +959,11 @@ def ivf_index_pq_stats(spark: SparkSession, index_path: str) -> DataFrame:
 
     cen_path, asg_path, _ = _paths(index_path)
     pq_cb_path, pq_codes_path = _pq_paths(index_path)
-    asg = _try_read(spark, asg_path)
-    cb = _try_read(spark, pq_cb_path)
-    pq = _try_read(spark, pq_codes_path)
+    asg = open_table(spark, asg_path)
+    cb = open_table(spark, pq_cb_path)
+    pq = open_table(spark, pq_codes_path)
     if asg is None or cb is None or pq is None:
-        cen = _try_read(spark, cen_path)
+        cen = open_table(spark, cen_path)
         ct = cen.schema["cell"].dataType if cen is not None else T.IntegerType()
         return local_frame(
             spark,
@@ -1180,14 +1005,14 @@ def ivf_index_stats(spark: SparkSession, index_path: str) -> DataFrame:
     |x - code/scale| per vector, averaged over the cell) — the
     operational dashboard row an index owner watches between rebuilds."""
     cen_path, asg_path, code_path = _paths(index_path)
-    asg = _try_read(spark, asg_path)
-    codes = _try_read(spark, code_path)
+    asg = open_table(spark, asg_path)
+    codes = open_table(spark, code_path)
     if asg is None or codes is None:
         # purge/expire delete an emptied sub-table's directory; the
         # stats view of that state is zero cells, not AnalysisException
         from pyspark.sql import types as T
 
-        cen = _try_read(spark, cen_path)
+        cen = open_table(spark, cen_path)
         ct = cen.schema["cell"].dataType if cen is not None else T.IntegerType()
         return local_frame(
             spark,

@@ -469,8 +469,8 @@ def main_ann(argv: list[str] | None = None) -> int:
             ),
         )
     elif action == "rebuild":
-        # retrain centroids from the index's own corpus; staged
-        # whole-index swap — the acted-on path for the drift alarms
+        # retrain centroids from the index's own corpus; one commit of
+        # the whole index root — the acted-on path for the drift alarms
         k_cells = conf.get("k-cells")
         pq_m = conf.get("pq-m")
         info = ann_index.rebuild_ivf_index(
@@ -658,13 +658,11 @@ def main_refresher(argv: list[str] | None = None) -> int:
          "aggregates": {"out_col": {"kind": "sum|count|min|max",
                                     "column": "src_col"}, ...}}
 
-    Crash safety (same discipline as the streaming sinks'
-    ``_replay_guarded_swap``): the merged result is written to
-    ``__refresh_staging`` FIRST, then the snapshot is rewritten from it,
-    and staging is KEPT as the recovery copy. A crash mid-rewrite (old
-    snapshot deleted, new one uncommitted) is detected on the next run —
-    committed staging + uncommitted snapshot — and the snapshot is
-    restored from staging before anything else happens; history is never
+    Crash safety (the streaming sinks' commit, ``io.commit``): the
+    merged result is written once into a staging sidecar and renamed
+    over the snapshot, so the snapshot is never torn. A crash mid-commit
+    is finished when the next run opens the snapshot (it reports
+    "recovered snapshot"), before anything else happens; history is never
     silently discarded into a delta-only bootstrap. With ``delta-id``
     set, the snapshot carries a bounded ledger of the last ``_LEDGER_CAP``
     applied ids (``__applied_delta_ids``, plus ``__last_delta_id`` for
@@ -678,12 +676,16 @@ def main_refresher(argv: list[str] | None = None) -> int:
     spark = _session(conf, "refresher")
     from pyspark.sql import functions as F
 
+    from spark_pipeline_spark.io.commit import (
+        commit,
+        committed_snapshot_exists,
+        open_table,
+    )
     from spark_pipeline_spark.io.sources import load
     from spark_pipeline_spark.operators.incremental import (
         aggregate_snapshot,
         incremental_agg_merge,
     )
-    from spark_pipeline_spark.streaming import committed_snapshot_exists
 
     keys = list(conf["keys"])
     spec = {
@@ -699,23 +701,18 @@ def main_refresher(argv: list[str] | None = None) -> int:
             "U+001F; choose an id without control characters"
         )
     path = conf["snapshot"]["path"]
-    staging = path.rstrip("/") + "__refresh_staging"
 
-    target_ok = committed_snapshot_exists(spark, path)
-    if not target_ok and committed_snapshot_exists(spark, staging):
-        # crash window: staging committed, snapshot torn mid-rewrite —
-        # restore the snapshot from the recovery copy before proceeding
-        spark.read.parquet(staging).write.mode("overwrite").parquet(path)
-        target_ok = True
-        print("recovered snapshot from staging")
+    interrupted = not committed_snapshot_exists(spark, path)
+    snap_full = open_table(spark, path)  # finishes an interrupted commit
+    if interrupted and snap_full is not None:
+        print("recovered snapshot from an interrupted commit")
 
     applied: list[str] = []
-    if target_ok:
-        snap_full = spark.read.parquet(path)
+    if snap_full is not None:
         # replay ledger: the last _LEDGER_CAP applied delta ids ride in the
         # snapshot itself (same column value on every row — the snapshot is
         # an aggregate, so rows = groups, and the ledger string is bounded),
-        # which keeps the guard inside the staging-swap atomicity. A
+        # which keeps the guard inside the commit's atomicity. A
         # bounded ledger protects against ANY retry within the last
         # _LEDGER_CAP refreshes — including out-of-order cron retries of an
         # OLDER delta after newer ones applied, which a latest-id-only
@@ -746,10 +743,7 @@ def main_refresher(argv: list[str] | None = None) -> int:
         new = new.withColumn(
             "__applied_delta_ids", F.lit("\x1f".join(ledger))
         ).withColumn("__last_delta_id", F.lit(str(delta_id)))
-    new.write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).write.mode("overwrite").parquet(path)
-    # staging is deliberately KEPT: it is the recovery copy for the
-    # rewrite crash window (the next refresh overwrites it)
+    commit(spark, path, new.write.mode("overwrite").parquet)
     print(f"{action} snapshot rows: {spark.read.parquet(path).count()}")
     print(f"execution time: {time.time() - t0:.1f}s")
     return 0

@@ -28,21 +28,20 @@ as column metadata (stamped by ``minhash_index_tables``; Spark round-
 trips column metadata through parquet), so downstream consumers keep
 the mismatched-index refusal they have on in-memory tables.
 
-Commit discipline: the whole index is written under
-``<path>__staging_<appId>`` and renamed into place in ONE directory
-rename — readers see either no index or a complete one, never a
-partial build (the manifest rides inside the same rename). A build
-that loses the publish race to a concurrent builder discards its
-staging copy and uses the winner's (both builds are deterministic
-functions of the same corpus, so the copies are identical).
+Commit discipline: the whole index is written once into a staging
+root and renamed into place by `io.commit.commit` — readers see the
+previous index or the complete new one, never a partial build (the
+manifest rides inside the same rename), and the next open finishes a
+commit a crash interrupted. One builder per path at a time: the
+registry keys the path by session (`applicationId`).
 
 Staleness: ``load_neardup_graph_index`` returns ``None`` unless the
 manifest's ``(version, fingerprint)`` matches the caller's — callers
 derive ``fingerprint`` from the source data (see
 :func:`dataset_fingerprint`) so a regenerated corpus or a bumped
 ``GRAPH_INDEX_VERSION`` forces a rebuild instead of silently serving
-stale labels. A stale live index is deleted by the next successful
-build's publish.
+stale labels. A stale live index is replaced by the next successful
+build's commit.
 
 100 TB posture: the build is the standard banded near-dup pipeline
 (one shingle scan, banded equi-join candidates, star rounds / LPA
@@ -62,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_pipeline_spark.gate import local_frame
+from spark_pipeline_spark.io.commit import commit, open_table, require_jvm
 
 GRAPH_INDEX_VERSION = 1
 
@@ -97,9 +97,7 @@ def dataset_fingerprint(sf_dir: str, table: str = "documents") -> str:
 
 
 def _manifest_fingerprint(spark: SparkSession, path: str) -> tuple | None:
-    from spark_pipeline_spark.streaming import _try_read_parquet
-
-    m = _try_read_parquet(spark, path.rstrip("/") + "/manifest")
+    m = open_table(spark, path.rstrip("/") + "/manifest")
     if m is None:
         return None
     row = m.first()
@@ -148,9 +146,9 @@ def build_neardup_graph_index(
     lpa_iters: int = 3,
 ) -> dict[str, DataFrame]:
     """Build the full base-state artifact over ``docs`` (the corpus the
-    increments will be folded into) and publish it at ``path`` with one
-    atomic directory rename. Returns the live tables (via
-    :func:`load_neardup_graph_index` on the published copy)."""
+    increments will be folded into) and commit it at ``path`` with one
+    rename pair. Returns the live tables (via
+    :func:`load_neardup_graph_index` on the committed copy)."""
     from spark_pipeline_spark.operators.dedup import (
         minhash_index_tables,
         minhash_near_dup_pairs,
@@ -159,54 +157,36 @@ def build_neardup_graph_index(
         connected_components_star,
         label_propagation,
     )
-    from spark_pipeline_spark.streaming import (
-        _hadoop_delete,
-        _hadoop_rename,
-        hadoop_path_exists,
-    )
 
-    root = path.rstrip("/")
-    staging = f"{root}__staging_{spark.sparkContext.applicationId}"
-    _hadoop_delete(spark, staging)
-
+    require_jvm(spark, "build_neardup_graph_index")
     base, banded = minhash_index_tables(
         docs, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands
     )
-    base.write.parquet(f"{staging}/shingles")
-    banded.write.parquet(f"{staging}/bands")
-    minhash_near_dup_pairs(
-        None, id_col, text_col, threshold=threshold,
-        shingles=base, bands_table=banded,
-    ).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).write.parquet(f"{staging}/edges")
-    # graph passes read the staged edge parquet back: truncated lineage
-    # (the banded join never re-executes per star/LPA round) and the
-    # exact bytes later increments will read
-    edges = spark.read.parquet(f"{staging}/edges")
-    connected_components_star(edges).write.parquet(f"{staging}/components")
-    label_propagation(edges, n_iter=lpa_iters).write.parquet(
-        f"{staging}/communities"
-    )
-    local_frame(
-        spark,
-        [(GRAPH_INDEX_VERSION, fingerprint, n, num_hashes, bands,
-          float(threshold), lpa_iters)],
-        "version INT, fingerprint STRING, n INT, num_hashes INT, "
-        "bands INT, threshold DOUBLE, lpa_iters INT",
-    ).coalesce(1).write.parquet(f"{staging}/manifest")
 
-    # publish: delete a stale live copy, then one whole-dir rename.
-    # Losing the race to a concurrent builder (rename fails because live
-    # reappeared) is benign — discard staging, read the winner's copy.
-    if hadoop_path_exists(spark, root):
-        _hadoop_delete(spark, root)
-    if not _hadoop_rename(spark, staging, root):
-        _hadoop_delete(spark, staging)
-    out = load_neardup_graph_index(spark, root, fingerprint)
-    if out is None:
-        raise IOError(
-            f"build_neardup_graph_index: publish to {root} failed and no "
-            f"concurrent builder's current copy is readable"
+    def write(staging: str) -> None:
+        base.write.parquet(f"{staging}/shingles")
+        banded.write.parquet(f"{staging}/bands")
+        minhash_near_dup_pairs(
+            None, id_col, text_col, threshold=threshold,
+            shingles=base, bands_table=banded,
+        ).select(
+            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        ).write.parquet(f"{staging}/edges")
+        # graph passes read the staged edge parquet back: truncated
+        # lineage (the banded join never re-executes per star/LPA round)
+        # and the exact bytes later increments will read
+        edges = spark.read.parquet(f"{staging}/edges")
+        connected_components_star(edges).write.parquet(f"{staging}/components")
+        label_propagation(edges, n_iter=lpa_iters).write.parquet(
+            f"{staging}/communities"
         )
-    return out
+        local_frame(
+            spark,
+            [(GRAPH_INDEX_VERSION, fingerprint, n, num_hashes, bands,
+              float(threshold), lpa_iters)],
+            "version INT, fingerprint STRING, n INT, num_hashes INT, "
+            "bands INT, threshold DOUBLE, lpa_iters INT",
+        ).coalesce(1).write.parquet(f"{staging}/manifest")
+
+    commit(spark, path, write)
+    return load_neardup_graph_index(spark, path, fingerprint)

@@ -9,10 +9,12 @@ remedy is periodic rewrite at a target file size.
 ``file_stats`` inspects a directory tree through the Hadoop FS API (so
 it works on HDFS/S3A, not just local paths). ``compact_parquet``
 rewrites data at ``target_mb`` per file, sizing the partition count from
-the MEASURED input bytes — not a guess — and writes to a staging
-directory first, swapping only after the rewrite commits (the same
-staging discipline as ``streaming.stream_upsert_sink``; an overwrite
-that read its own input lazily would corrupt the table).
+the MEASURED input bytes — not a guess — and commits through
+``io.commit.commit``: the rewrite lands once in a hidden staging
+sidecar and is renamed over the table (an overwrite that read its own
+input lazily would corrupt the table). ``purge_ids_from_tables`` is the
+right-to-be-forgotten engine of the streaming dedup indexes and the IVF
+index: an anti-join per table, committed the same way.
 
 Partitioned layouts: pass ``partition_by`` to keep the directory
 structure; compaction then repartitions on the partition columns so each
@@ -22,24 +24,19 @@ output task writes one directory.
 from __future__ import annotations
 
 import math
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["file_stats", "compact_parquet"]
+from spark_pipeline_spark.io.commit import (
+    commit,
+    delete_path,
+    filesystem,
+    open_table,
+    require_jvm,
+)
 
-
-def _fs(spark: SparkSession, path: str):
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is None:
-        # file_stats has a Connect fallback; the compaction swap needs a
-        # real filesystem delete, which the DataFrame API can't express
-        raise RuntimeError(
-            "compact_parquet needs a classic SparkSession (staging delete "
-            "goes through the Hadoop FS API); Spark Connect sessions "
-            "don't expose spark._jvm"
-        )
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+__all__ = ["file_stats", "compact_parquet", "purge_ids_from_tables"]
 
 
 def _sizes_via_read(spark: SparkSession, path: str, suffix: str) -> list[int]:
@@ -66,7 +63,7 @@ def file_stats(spark: SparkSession, path: str, suffix: str = ".parquet") -> dict
     if getattr(spark, "_jvm", None) is None:
         sizes = _sizes_via_read(spark, path, suffix)
     else:
-        fs, hpath, _ = _fs(spark, path)
+        fs, hpath = filesystem(spark, path)
         # qualify BEFORE comparing: listFiles returns fully-qualified
         # URIs, so a relative caller path would never prefix-match and
         # every ancestor of the cwd would be scanned for hidden segments
@@ -124,35 +121,55 @@ def compact_parquet(
     bytes, which for parquet→parquet rewrites is the right first-order
     estimate (same encoding, same compression family).
     """
-    # fail fast BEFORE any mutation: the final staging delete needs the
-    # Hadoop FS API, and discovering that only after the table has been
-    # rewritten would leave staging debris behind a surprise exception
-    if getattr(spark, "_jvm", None) is None:
-        _fs(spark, path)  # raises the canonical Connect error
+    # fail fast BEFORE any mutation: the commit renames through the
+    # Hadoop FS API
+    require_jvm(spark, "compact_parquet")
 
+    df = open_table(spark, path)
     before = file_stats(spark, path)
-    if before["n_files"] < min_skip_files:
+    if df is None or before["n_files"] < min_skip_files:
         return {"before": before, "after": before, "compacted": False}
 
     n_parts = max(1, math.ceil(before["total_bytes"] / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + "__compact_staging"
-
-    if partition_by:
-        out = df.repartition(n_parts, *partition_by)
-        out.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
-    else:
-        out = df.repartition(n_parts)
-        out.write.mode("overwrite").parquet(staging)
-
-    # swap: parquet reads are lazy, so the rewrite MUST land in staging
-    # before the original is overwritten from it
-    final = spark.read.parquet(staging).write.mode("overwrite")
-    if partition_by:
-        final = final.partitionBy(*partition_by)
-    final.parquet(path)
-
-    fs, spath, _ = _fs(spark, staging)
-    fs.delete(spath, True)
+    parts = partition_by or ()
+    commit(spark, path, df.repartition(n_parts, *parts).write.partitionBy(*parts).parquet)
     after = file_stats(spark, path)
     return {"before": before, "after": after, "compacted": True}
+
+
+def purge_ids_from_tables(
+    spark: SparkSession,
+    tables: Iterable[tuple[str, str, str, Sequence[str]]],
+    ids: DataFrame,
+) -> dict:
+    """Shared purge engine for the ``batch=<id>``-partitioned index
+    tables (the LSH and semantic dedup indexes, the IVF index): for each
+    ``(name, path, id_col, partition_cols)``, anti-join the table against
+    the one-column tombstone frame ``ids`` and commit the survivors with
+    the same partition columns, so the sinks' batch replay exclusion and
+    the IVF search's cell pruning keep working. A table whose rows are
+    ALL purged is deleted outright (a row-less parquet table has no
+    schema to re-read; absence is the empty state every reader of these
+    layouts handles). Returns ``{f"{name}_removed": n}``."""
+    require_jvm(spark, "purge_ids_from_tables")
+    tomb = ids.toDF("__purge_id")
+    out = {}
+    for name, path, col, parts in tables:
+        df = open_table(spark, path)
+        if df is None:
+            out[f"{name}_removed"] = 0
+            continue
+        before = df.count()
+        survivors = df.join(
+            tomb, df[col] == tomb["__purge_id"], "left_anti"
+        ).persist()
+        try:
+            n_surv = survivors.count()
+            if n_surv == 0:
+                delete_path(spark, path)
+            else:
+                commit(spark, path, survivors.write.partitionBy(*parts).parquet)
+        finally:
+            survivors.unpersist()
+        out[f"{name}_removed"] = before - n_surv
+    return out

@@ -254,19 +254,19 @@ def build_bpe_vocab(
       against — persisted AT build time because recomputing it later
       would use the drifted corpus, which is the thing being measured.
 
-    Returns the stats row as a dict."""
-    merges, sym = bpe_train(words, n_merges, term_col, count_col)
-    root = path.rstrip("/")
-    m_path, s_path, st_path = _vocab_paths(root)
+    The three tables commit together: written once under a staging
+    root, then one rename pair replaces the vocab root
+    (`io.commit.commit`), so a reader never sees merges of one build
+    with symbols of another. Returns the stats row as a dict."""
+    from spark_pipeline_spark.io.commit import commit, require_jvm
 
+    require_jvm(spark, "build_bpe_vocab")
+    merges, sym = bpe_train(words, n_merges, term_col, count_col)
     mdf = local_frame(
         spark,
         [(m["step"], m["pair"], m["n"]) for m in merges],
         "step int, pair string, n long",
     )
-    mdf.coalesce(1).write.mode("overwrite").parquet(m_path)
-    sym.write.mode("overwrite").parquet(s_path)
-
     stats_row = sym.agg(
         F.lit(len(merges)).cast("int").alias("n_merges"),
         F.count(F.lit(1)).cast("long").alias("n_terms"),
@@ -276,15 +276,22 @@ def build_bpe_vocab(
         "build_fertility",
         F.round(F.col("total_pieces") / F.col("total_words"), 6),
     )
-    stats_row.coalesce(1).write.mode("overwrite").parquet(st_path)
-    info = stats_row.first().asDict()
-    return info
+
+    def write(staging: str) -> None:
+        m_path, s_path, st_path = _vocab_paths(staging)
+        mdf.coalesce(1).write.parquet(m_path)
+        sym.write.parquet(s_path)
+        stats_row.coalesce(1).write.parquet(st_path)
+
+    commit(spark, path, write)
+    return stats_row.first().asDict()
 
 
 def bpe_vocab_stats(spark: SparkSession, path: str) -> dict:
     """The persisted build-time stats row of a vocab dir, as a dict."""
-    _, _, st_path = _vocab_paths(path)
-    return spark.read.parquet(st_path).first().asDict()
+    from spark_pipeline_spark.io.commit import open_table
+
+    return open_table(spark, _vocab_paths(path)[2]).first().asDict()
 
 
 def bpe_fertility_drift(
@@ -317,12 +324,14 @@ def bpe_fertility_drift(
     Scale: ONE vocabulary-sized encode pass + one aggregate; the merge
     table and the one-row stats frame are driver-side constants (the
     artifact, not data)."""
+    from spark_pipeline_spark.io.commit import open_table
+
     m_path, _, st_path = _vocab_paths(path)
     merges = [
         r["pair"]
-        for r in spark.read.parquet(m_path).orderBy("step").collect()
+        for r in open_table(spark, m_path).orderBy("step").collect()
     ]
-    stats = spark.read.parquet(st_path)
+    stats = open_table(spark, st_path)
 
     enc = bpe_encode(
         words.select(F.col(term_col).alias("term"),
@@ -368,31 +377,17 @@ def retrain_bpe_vocab(
     count_col: str = "n",
 ) -> dict:
     """The drift alarm's ACTED-ON path: retrain the merges on the
-    CURRENT corpus and swap the whole persisted vocabulary — same
-    staged-build + checked-rename commit discipline as
-    `ann_index.rebuild_ivf_index` (live tables serve reads for the
-    entire retrain; commit is one rename per sub-table via
-    `streaming.staged_swap_commit`, which rolls back and raises on a
-    failed rename instead of deleting the only remaining copy).
+    CURRENT corpus and replace the whole persisted vocabulary through
+    `build_bpe_vocab`'s commit (the live tables serve reads for the
+    entire retrain; the commit is one rename pair, checked, rolled back
+    and raised on failure — see `io.commit`).
 
     ``n_merges`` defaults to the live vocab's merge count. Returns the
-    new stats dict plus ``swapped``."""
-    from spark_pipeline_spark.streaming import (
-        _hadoop_delete,
-        staged_swap_commit,
-    )
-
-    root = path.rstrip("/")
+    new stats dict plus ``swapped``, the tables the committed root
+    holds."""
     if n_merges is None:
-        n_merges = int(bpe_vocab_stats(spark, root)["n_merges"])
-    staging_root = root + "__retrain_staging"
-    _hadoop_delete(spark, staging_root)  # clobber a crashed run's leftovers
+        n_merges = int(bpe_vocab_stats(spark, path)["n_merges"])
     info = build_bpe_vocab(
-        spark, words, staging_root, n_merges,
-        term_col=term_col, count_col=count_col,
+        spark, words, path, n_merges, term_col=term_col, count_col=count_col,
     )
-    swapped = staged_swap_commit(
-        spark, root, staging_root, ("merges", "symbols", "stats"),
-        op="retrain_bpe_vocab",
-    )
-    return {**info, "swapped": swapped}
+    return {**info, "swapped": ["merges", "symbols", "stats"]}

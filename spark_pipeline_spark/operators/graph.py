@@ -131,16 +131,16 @@ def connected_components(
             .select(
                 "id",
                 F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
-                F.col("label").alias("__old"),
+                F.col("label").alias("__prev"),
             )
         )
         if use_reliable_checkpoint:
             new_labels = new_labels.checkpoint(eager=True)
         else:
             new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("label") != F.col("__old")).count()
+        changed = new_labels.filter(F.col("label") != F.col("__prev")).count()
         _free_local_checkpoint(labels, successor=new_labels)  # superseded round
-        labels = new_labels.drop("__old")
+        labels = new_labels.drop("__prev")
         if changed == 0:
             sym.unpersist()
             return labels.select("id", F.col("label").alias("component"))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_pipeline_spark.gate import local_frame
+from spark_pipeline_spark.io.commit import open_table
 from spark_pipeline_spark.session import query_persist
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -16885,7 +16886,7 @@ def ivf_index_lifecycle_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     refresh_ivf_index(spark, e.filter(is_new), index_path, batch_id=1)
 
     stats = ivf_index_stats(spark, index_path)
-    asg = spark.read.parquet(index_path.rstrip("/") + "/assignments")
+    asg = open_table(spark, index_path.rstrip("/") + "/assignments")
     counts = asg.groupBy("cell").agg(
         F.sum(F.when(F.col("batch") == 0, 1).otherwise(0))
         .cast("long")
@@ -17038,8 +17039,6 @@ def ivf_index_pq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_pipeline_spark.functions import md5_unit
     from spark_pipeline_spark.operators.similarity import cosine_topk
 
-    from concurrent.futures import ThreadPoolExecutor
-
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     is_new = md5_unit("vec_id") < 0.1
     index_path = "{}/spark_graft_ivf_pq_{}_{}".format(
@@ -17048,24 +17047,18 @@ def ivf_index_pq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.applicationId,
     )
     q = e.filter(F.col("vec_id") < 20)
-    # The exact brute-force truth reads ONLY the base table —
-    # independent of the index build/refresh chain, so it runs
-    # concurrently with it (guide §2.6; the same overlap as
-    # `ivf_index_rebuild_recall_report`) instead of serially after the
-    # last index commit. Persisted so the returned frame reads the
-    # materialized truth instead of recomputing it.
+    # The exact brute-force truth reads ONLY the base table; persisted
+    # so the returned frame reads the materialized truth instead of
+    # recomputing it.
     exact = query_persist(
         cosine_topk(e, q, k=3, exclude_self=True).select(
             "query_id", "neighbor_id"
         )
     )
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_truth = pool.submit(exact.count)
-        build_ivf_index(
-            spark, e.filter(~is_new), index_path, k_cells=4, pq_m=2, pq_k=4
-        )
-        refresh_ivf_index(spark, e.filter(is_new), index_path, batch_id=1)
-        fut_truth.result()
+    build_ivf_index(
+        spark, e.filter(~is_new), index_path, k_cells=4, pq_m=2, pq_k=4
+    )
+    refresh_ivf_index(spark, e.filter(is_new), index_path, batch_id=1)
 
     pq_top = ivf_index_search_pq(
         spark, index_path, q, k=3, nprobe=2, oversample=3, exclude_self=True
@@ -17723,7 +17716,7 @@ def ivf_index_pq_code_drift_report(
     )
     refresh_ivf_index(spark, e.filter(is_new), index_path, batch_id=1)
 
-    pq = spark.read.parquet(index_path.rstrip("/") + "/codes_pq")
+    pq = open_table(spark, index_path.rstrip("/") + "/codes_pq")
     per_code = (
         pq.select("vec_id", "batch", F.posexplode("codes").alias("m", "code"))
         .groupBy("m", "code")
@@ -17867,8 +17860,8 @@ def ivf_index_rebuild_recall_report(
     (exactly what retraining from the persisted assignments sees).
 
     Scale shape: the build is the one corpus scan; refresh touches the
-    increment; the rebuild's staged swap moves zero data bytes at
-    commit (per-table renames); each search prunes to nprobe=2 cell
+    increment; the rebuild's commit moves zero data bytes (one rename
+    pair for the index root); each search prunes to nprobe=2 cell
     directories; recall joins the 20-query top-k frames only. The
     before-phase numbers are materialized (scalar counts) BEFORE the
     swap — the lazily-read search frame would otherwise re-read the
@@ -17885,8 +17878,6 @@ def ivf_index_rebuild_recall_report(
     from spark_pipeline_spark.functions import md5_unit
     from spark_pipeline_spark.operators.similarity import cosine_topk
 
-    from concurrent.futures import ThreadPoolExecutor
-
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     is_new = md5_unit("vec_id") < 0.1
     index_path = "{}/spark_graft_ivf_rebuild_{}_{}".format(
@@ -17900,20 +17891,9 @@ def ivf_index_rebuild_recall_report(
             "query_id", F.col("neighbor_id").alias("__xn")
         )
     )
-
-    # The exact brute-force truth + query count read ONLY the base
-    # table — independent of the index build/refresh chain, so the two
-    # chains run concurrently (guide §2.6) instead of the truth pass
-    # serially following the last index commit.
-    def truth_chain() -> int:
-        exact.count()  # materializes the persisted truth frame
-        return queries.count()
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_truth = pool.submit(truth_chain)
-        build_ivf_index(spark, e.filter(~is_new), index_path, k_cells=4)
-        refresh_ivf_index(spark, e.filter(is_new), index_path, batch_id=1)
-        n_q = fut_truth.result()
+    n_q = queries.count()
+    build_ivf_index(spark, e.filter(~is_new), index_path, k_cells=4)
+    refresh_ivf_index(spark, e.filter(is_new), index_path, batch_id=1)
 
     def n_hits() -> int:
         topk = ivf_index_search(
@@ -18010,10 +17990,10 @@ def _incremental_delta_edges(
         )
     ot = (
         idx["bands"].select("__id", "__band", "__key")
-        .withColumn("__old", F.lit(True))
+        .withColumn("__in_base", F.lit(True))
         .unionByName(
             banded_n.select("__id", "__band", "__key")
-            .withColumn("__old", F.lit(False))
+            .withColumn("__in_base", F.lit(False))
         )
         .alias("ot")
     )
@@ -18023,7 +18003,7 @@ def _incremental_delta_edges(
             ot,
             (F.col("nw.__band") == F.col("ot.__band"))
             & (F.col("nw.__key") == F.col("ot.__key"))
-            & (F.col("ot.__old") | (F.col("nw.__id") < F.col("ot.__id"))),
+            & (F.col("ot.__in_base") | (F.col("nw.__id") < F.col("ot.__id"))),
         )
         .select(F.col("ot.__id").alias("src"), F.col("nw.__id").alias("dst"))
         .distinct()

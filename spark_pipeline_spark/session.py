@@ -159,9 +159,10 @@ def _modification_time(spark: SparkSession, path: str) -> int | None:
     cannot be stat'ed (missing path, glob, no JVM)."""
     from py4j.protocol import Py4JError
 
+    from spark_pipeline_spark.io.commit import filesystem
+
     try:
-        hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, hpath = filesystem(spark, path)
         return int(fs.getFileStatus(hpath).getModificationTime())
     except (AttributeError, Py4JError):
         return None

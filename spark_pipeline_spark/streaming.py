@@ -25,6 +25,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_pipeline_spark.gate import local_frame
+from spark_pipeline_spark.io.commit import (
+    commit,
+    delete_path,
+    open_table,
+    require_jvm,
+)
 
 __all__ = [
     "stream_enrich",
@@ -48,92 +54,8 @@ __all__ = [
     "stream_session_agg",
     "stream_stream_interval_join",
     "run_available_now_to_memory",
-    "hadoop_path_exists",
-    "staged_swap_commit",
-    "committed_snapshot_exists",
     "SNAPSHOT_BATCH_COL",
 ]
-
-
-def _path_exists_via_read(spark: SparkSession, path: str) -> bool:
-    """Connect-compatible existence probe: ask the server to *analyze* a
-    ``binaryFile`` scan of ``path``. Analysis resolves the path on the
-    cluster's filesystem (same Hadoop FS the JVM API would hit) and
-    raises ``PATH_NOT_FOUND`` when it's absent; no file CONTENT is ever
-    read — the probe stops at plan analysis (an empty-but-existing
-    directory analyzes fine because binaryFile has a fixed schema and
-    needs no inference)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.read.format("binaryFile").load(path).schema
-        return True
-    except AnalysisException as exc:
-        msg = str(exc)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return False
-        raise
-
-
-def _snapshot_files_via_read(spark: SparkSession, path: str) -> list[str]:
-    """Connect-compatible file listing: the visible (non ``_``/``.``)
-    files under ``path``, via a column-pruned ``binaryFile`` scan — only
-    the ``path`` metadata column is collected, so no file bytes move."""
-    return [
-        r.path
-        for r in spark.read.format("binaryFile")
-        .load(path)
-        .select("path")
-        .collect()
-    ]
-
-
-def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` exists on whatever filesystem its scheme resolves
-    to (local, HDFS, s3a, ...) — via the JVM Hadoop FS API on a classic
-    session, or a ``binaryFile`` analysis probe on Spark Connect (no
-    ``spark._jvm`` there). Both run the check on the CLUSTER's
-    filesystem, unlike ``os.path``.
-    """
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is None:
-        return _path_exists_via_read(spark, path)
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def committed_snapshot_exists(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` holds a COMMITTED parquet snapshot — the
-    directory exists AND contains a ``_SUCCESS`` marker or at least one
-    data file. Bare directory existence is a coarser signal: an
-    overwrite that crashed after creating the directory but before
-    committing files (only ``_temporary`` left behind) would otherwise
-    read as "snapshot present" and fail every checkpoint replay until
-    manual cleanup.
-
-    On Spark Connect (no ``spark._jvm``) the check falls back to a
-    column-pruned ``binaryFile`` listing: committed = at least one
-    visible data file. (File sources hide ``_``-prefixed entries, so
-    ``_SUCCESS`` itself isn't observable there — a committed snapshot
-    with ZERO data files would read as absent; parquet commits of
-    non-empty frames always leave at least one part file.)"""
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is None:
-        if not _path_exists_via_read(spark, path):
-            return False
-        return bool(_snapshot_files_via_read(spark, path))
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return False
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/_SUCCESS")):
-        return True
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if status.isFile() and not name.startswith(("_", ".")):
-            return True
-    return False
 
 
 #: Metadata column stamped onto every row of a maintained parquet
@@ -145,98 +67,43 @@ SNAPSHOT_BATCH_COL = "__last_batch_id"
 
 
 def _replay_guarded_swap(spark, target_path: str, batch_id: int, merge_fn) -> None:
-    """Shared exactly-once commit protocol for the foreachBatch parquet
-    sinks (:func:`stream_upsert_sink`, :func:`stream_incremental_agg_sink`).
+    """Shared exactly-once commit for the foreachBatch parquet sinks
+    (:func:`stream_upsert_sink`, :func:`stream_incremental_agg_sink`,
+    :func:`stream_topk_sink`).
 
     ``foreachBatch`` is at-least-once: after a crash between the
-    snapshot swap and the checkpoint commit, the same ``batch_id`` is
+    snapshot commit and the checkpoint commit, the same ``batch_id`` is
     delivered again (with identical content — replays re-read the same
     checkpointed source offsets). Without a guard, an additive merge
     applies that batch twice and double-counts. The guard: every
     snapshot row carries ``SNAPSHOT_BATCH_COL`` = the last merged batch
     id, so a replayed ``batch_id <= last`` is recognized and skipped.
 
-    Commit sequence per batch (all writes distributed, none through the
-    driver): write merged result to ``<target>__staging``, then rewrite
-    it onto ``target_path``. The staging hop exists because parquet
-    reads are lazy — overwriting the path being read would destroy the
-    input mid-plan. Crash-state recovery at entry, keyed on
-    :func:`committed_snapshot_exists` (a ``_SUCCESS``/data-file check,
-    not bare directory existence):
-
-    - target committed → normal path: skip if ``batch_id`` already
-      merged, else merge and swap;
-    - target dir present but uncommitted (the final overwrite crashed
-      mid-write) + staging committed → the staging copy IS the newest
-      snapshot: recover from it (finish the interrupted swap, then skip
-      or merge as its batch id dictates). This state was previously a
-      silent first-batch restart — i.e. data loss;
-    - target uncommitted debris + staging also uncommitted → raise:
-      the state is not mechanically recoverable, and pretending
-      first-batch would overwrite whatever a human could still salvage;
-    - target truly absent (no directory) → genuine first batch.
+    The merged result is written once and renamed into place by
+    :func:`~spark_pipeline_spark.io.commit.commit` (distributed, never
+    through the driver). Opening the snapshot through
+    :func:`~spark_pipeline_spark.io.commit.open_table` finishes a commit
+    a crash interrupted, so the guard reads the newest committed
+    snapshot; crashed-overwrite debris that nothing can restore raises
+    instead of restarting as first-batch, which would overwrite
+    whatever a human could still salvage.
 
     Legacy snapshots written before this column existed merge with
     ``last = -1`` (at-least-once, the old behavior), documented over
     failing.
     """
-    staging = target_path.rstrip("/") + "__staging"
-    if not committed_snapshot_exists(spark, target_path):
-        target_debris = hadoop_path_exists(spark, target_path)
-        if committed_snapshot_exists(spark, staging):
-            # Interrupted swap: the committed staging copy is the newest
-            # snapshot. Finish the swap FIRST, then proceed from the
-            # (now committed) target — merging straight off the staging
-            # read would lazily consume the very path the next staging
-            # write overwrites.
-            spark.read.parquet(staging).write.mode("overwrite").parquet(target_path)
-        elif target_debris:
-            raise RuntimeError(
-                f"snapshot at {target_path!r} exists but holds no committed "
-                f"files (crashed overwrite debris) and no committed staging "
-                f"copy at {staging!r} to recover from; refusing to restart "
-                "as first-batch — inspect/remove the debris manually"
-            )
-
-    current = None
+    current = open_table(spark, target_path)
     last = -1
-    if committed_snapshot_exists(spark, target_path):
-        current = spark.read.parquet(target_path)
-        if SNAPSHOT_BATCH_COL in current.columns:
-            got = current.agg(F.max(SNAPSHOT_BATCH_COL)).first()[0]
-            last = -1 if got is None else int(got)
+    if current is not None and SNAPSHOT_BATCH_COL in current.columns:
+        got = current.agg(F.max(SNAPSHOT_BATCH_COL)).first()[0]
+        last = -1 if got is None else int(got)
 
     if last >= batch_id:
         return  # at-least-once replay of an already-merged batch: no-op
 
     data = current.drop(SNAPSHOT_BATCH_COL) if current is not None else None
     merged = merge_fn(data).withColumn(SNAPSHOT_BATCH_COL, F.lit(batch_id))
-    merged.write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).write.mode("overwrite").parquet(target_path)
-
-
-
-def _try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read committed parquet at ``path`` or return None when it is
-    ABSENT (missing path / only uncommitted ``_temporary`` debris).
-    Any other AnalysisException — e.g. conflicting schemas across batch
-    partitions — re-raises: treating it as "absent" would silently turn
-    real corruption into a no-op for callers like the purge routine."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force analysis
-        return df
-    except AnalysisException as exc:
-        msg = str(exc)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
-            return None
-        raise
+    commit(spark, target_path, merged.write.mode("overwrite").parquet)
 
 
 def read_parquet_stream(
@@ -599,7 +466,7 @@ def _accept_reject_batch(
 ) -> None:
     """Shared accept/persist/replay-idempotence engine for the
     index-backed dedup sinks (LSH and semantic), the write-side sibling
-    of :func:`_purge_from_batched_tables`:
+    of :func:`~spark_pipeline_spark.io.maintenance.purge_ids_from_tables`:
 
     - every persist goes through ``pin`` and is released in the finally
       — an exception mid-batch must not leak cached blocks for the life
@@ -659,13 +526,14 @@ def stream_upsert_sink(
     ``foreachBatch`` is the standard pattern for MERGE semantics without
     a transactional table format: each micro-batch runs the batch
     :func:`~spark_pipeline_spark.operators.merge.merge_upsert` of the
-    existing snapshot with the batch's rows, stages the result with a
-    distributed write (never through the driver), and swaps it into
-    place with a second write — the read-then-overwrite-the-same-path
-    trap needs the staging hop because parquet reads are lazy. A
-    transactional format (Delta/Iceberg) collapses the two writes into
-    one MERGE; the plan shape per batch is identical either way: one
-    exchange keyed on the merge key. Returns the started StreamingQuery.
+    existing snapshot with the batch's rows, writes the result once with
+    a distributed write (never through the driver) into a staging
+    sidecar, and renames it into place
+    (:func:`~spark_pipeline_spark.io.commit.commit`) — the snapshot being
+    read lazily is never overwritten in place. A transactional format
+    (Delta/Iceberg) turns this into one MERGE; the plan shape per batch
+    is identical either way: one exchange keyed on the merge key.
+    Returns the started StreamingQuery.
 
     With ``op_col`` the stream is a full CDC feed (Debezium-style): the
     batch merge becomes
@@ -682,14 +550,14 @@ def stream_upsert_sink(
     key_list = list(keys)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # Missing-snapshot detection is EXPLICIT (Hadoop FS API), never a
+        # Missing-snapshot detection is EXPLICIT (open_table), never a
         # catch-all around the read: a bare `except Exception` would
         # treat any transient FS error / corrupt snapshot / schema
         # mismatch as "first batch" and overwrite the accumulated
         # snapshot with just this micro-batch. Crash recovery + replay
         # skip live in _replay_guarded_swap; the keyed latest-wins merge
-        # is replay-idempotent on its own, but the guard also rescues a
-        # crashed final overwrite from the committed staging copy.
+        # is replay-idempotent on its own, but opening the snapshot also
+        # finishes a commit a crash interrupted.
         def merge(current: DataFrame | None) -> DataFrame:
             if op_col is not None:
                 base = (
@@ -721,8 +589,8 @@ def stream_incremental_agg_sink(
     :func:`~spark_pipeline_spark.operators.incremental.incremental_agg_merge`.
 
     Per micro-batch: aggregate the batch (map-side partial combine),
-    merge with the snapshot on ``keys``, stage, swap — the identical
-    staging discipline as :func:`stream_upsert_sink`, and the identical
+    merge with the snapshot on ``keys``, commit — the identical
+    write-once-and-rename commit as :func:`stream_upsert_sink`, and the identical
     invariant as the batch operator: after draining any stream, the
     snapshot equals the from-scratch aggregate of all rows. Unlike a
     watermarked streaming aggregation this keeps NO per-key state in the
@@ -865,8 +733,8 @@ def stream_dedup_lsh_sink(
         # batch=<id> SUBDIRECTORIES, so "exists" means "has readable
         # committed parquet", probed by the read itself — a crash that
         # left only _temporary content reads as absent.
-        idx_bands = _try_read_parquet(spark, bands_path)
-        idx_sh = _try_read_parquet(spark, shingles_path)
+        idx_bands = open_table(spark, bands_path)
+        idx_sh = open_table(spark, shingles_path)
         if idx_bands is not None and idx_sh is not None:
             idx_bands = idx_bands.filter(F.col("batch") != batch_id)
             idx_sh = idx_sh.filter(F.col("batch") != batch_id)
@@ -1026,7 +894,7 @@ def stream_semantic_dedup_sink(
 
         # (2) cross-batch vs the persisted index (self-batch excluded:
         # a replay's half-committed rows must not veto the batch)
-        idx = _try_read_parquet(spark, vectors_path)
+        idx = open_table(spark, vectors_path)
         if idx is not None:
             idx = idx.filter(F.col("batch") != batch_id)
             cross_denom = F.col("__n") * F.col("__ni")
@@ -1312,7 +1180,7 @@ def run_available_now_to_parquet(
             f"(checkpoint={checkpoint}); stopped the query to release "
             "the checkpoint lock"
         )
-    return _try_read_parquet(df.sparkSession, out_path)
+    return open_table(df.sparkSession, out_path)
 
 
 def stream_ann_refresh_sink(
@@ -1359,16 +1227,16 @@ def stream_ann_refresh_sink(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         root = index_path.rstrip("/")
-        if not hadoop_path_exists(spark, root + "/centroids"):
+        if open_table(spark, root + "/centroids") is None:
             raise RuntimeError(
                 "stream_ann_refresh_sink: no index at "
                 f"{index_path!r} — bootstrap with build_ivf_index first "
                 "(per-batch centroid training would make assignments "
                 "incomparable across batches)"
             )
-        base_df = _try_read_parquet(spark, root + "/stream_base")
+        base_df = open_table(spark, root + "/stream_base")
         if base_df is None:
-            existing = _try_read_parquet(spark, root + "/assignments")
+            existing = open_table(spark, root + "/assignments")
             base = (
                 0 if existing is None
                 else existing.agg(F.max("batch")).first()[0] + 1
@@ -1409,22 +1277,24 @@ def purge_ids_from_dedup_index(
     tombstone set — it joins, it is never collected or broadcast by
     hint).
 
-    Crash safety: each sub-table is rewritten through a ``__purge_staging``
-    copy first, then overwritten from it (the compact_parquet discipline —
-    parquet reads are lazy, so overwriting the path being read would
-    corrupt it). The ``batch=<id>`` partition layout is preserved via
-    ``partitionBy`` so the sink's self-batch replay exclusion keeps
-    working; a batch whose rows are all purged disappears entirely, which
+    Crash safety: each sub-table commits separately through
+    :func:`~spark_pipeline_spark.io.maintenance.purge_ids_from_tables`
+    (write once, rename into place). The ``batch=<id>`` partition layout
+    is preserved via ``partitionBy`` so the sink's self-batch replay
+    exclusion keeps working; a batch whose rows are all purged disappears entirely, which
     readers already treat as absent. Scale: anti-joins keyed on the id —
     cost O(|index|); the index rewrite moves only fixed-width band keys
     and shingle arrays (the optional ``accepted_path`` rewrite does move
     document payloads — that IS the table being redacted).
     """
-    sub_tables = [("bands", index_path.rstrip("/") + "/bands", "__id"),
-                  ("shingles", index_path.rstrip("/") + "/shingles", "__id")]
+    from spark_pipeline_spark.io.maintenance import purge_ids_from_tables
+
+    root = index_path.rstrip("/")
+    tables = [(name, f"{root}/{name}", "__id", ["batch"])
+              for name in ("bands", "shingles")]
     if accepted_path is not None:
-        sub_tables.append(("accepted", accepted_path, id_col))
-    return _purge_from_batched_tables(spark, sub_tables, ids)
+        tables.append(("accepted", accepted_path, id_col, ["batch"]))
+    return purge_ids_from_tables(spark, tables, ids)
 
 
 def purge_ids_from_semantic_index(
@@ -1439,12 +1309,14 @@ def purge_ids_from_semantic_index(
     its accepted table) — the same contract `purge_ids_from_dedup_index`
     gives the LSH sink: a forgotten vector stops vetoing future
     near-duplicates because its row leaves the only table the sink's
-    cross-batch check reads. Staged-copy crash discipline and
-    ``batch=<id>`` layout preservation are identical (shared helper)."""
-    sub_tables = [("vectors", index_path.rstrip("/") + "/vectors", "__id")]
+    cross-batch check reads. Commit discipline and ``batch=<id>`` layout
+    preservation are identical (shared engine)."""
+    from spark_pipeline_spark.io.maintenance import purge_ids_from_tables
+
+    tables = [("vectors", index_path.rstrip("/") + "/vectors", "__id", ["batch"])]
     if accepted_path is not None:
-        sub_tables.append(("accepted", accepted_path, id_col))
-    return _purge_from_batched_tables(spark, sub_tables, ids)
+        tables.append(("accepted", accepted_path, id_col, ["batch"]))
+    return purge_ids_from_tables(spark, tables, ids)
 
 
 def expire_index_batches(
@@ -1476,7 +1348,7 @@ def expire_index_batches(
     out: dict = {}
     for name in sub_dirs:
         path = f"{root}/{name}"
-        df = _try_read_parquet(spark, path)
+        df = open_table(spark, path)
         if df is None:
             out[name] = []
             continue
@@ -1486,11 +1358,11 @@ def expire_index_batches(
         # retain MORE batches than exist would delete the oldest ones)
         drop = ids[: max(0, len(ids) - keep_last_n)] if keep_last_n else ids
         for b in drop:
-            _hadoop_delete(spark, f"{path}/batch={b}")
+            delete_path(spark, f"{path}/batch={b}")
         if len(drop) == len(ids):
             # every batch expired: remove the now-empty parent so readers
             # see the absent-table empty state instead of a schemaless dir
-            _hadoop_delete(spark, path)
+            delete_path(spark, path)
         out[name] = drop
     return out
 
@@ -1514,14 +1386,14 @@ def compact_index_batches(
     filters on batch id — a replayed batch whose rows were folded into
     an older id would veto ITSELF). Newer batches are untouched.
 
-    Crash discipline (same staged order as the purge engine): combined
-    rows land in a ``__compact_staging`` copy first, the oldest batch
-    dir is rewritten from it, THEN the other compacted dirs are
-    deleted. A crash between those steps leaves duplicate rows across
-    directories — harmless to dedup semantics (vetoes are idempotent)
-    and healed by re-running: compaction DISTINCTs the non-batch
-    columns, so a rerun is idempotent. Returns
-    ``{sub_dir: [compacted batch ids]}``.
+    Crash discipline: the combined rows commit as the oldest batch's
+    directory (:func:`~spark_pipeline_spark.io.commit.commit`: written
+    once into a hidden sidecar inside the table, renamed into place),
+    THEN the other compacted dirs are deleted. A crash between those
+    steps leaves duplicate rows across directories — harmless to dedup
+    semantics (vetoes are idempotent) and healed by re-running:
+    compaction DISTINCTs the non-batch columns, so a rerun is
+    idempotent. Returns ``{sub_dir: [compacted batch ids]}``.
 
     Scope: the FLAT batch-partitioned tables only (LSH ``bands``/
     ``shingles``, the semantic sink's ``vectors``, ANN ``codes``/
@@ -1530,11 +1402,12 @@ def compact_index_batches(
     and break the search's partition pruning; leave it to a rebuild."""
     if keep_last_n < 0:
         raise ValueError(f"keep_last_n must be >= 0, got {keep_last_n}")
+    require_jvm(spark, "compact_index_batches")
     root = index_path.rstrip("/")
     out: dict = {}
     for name in sub_dirs:
         path = f"{root}/{name}"
-        df = _try_read_parquet(spark, path)
+        df = open_table(spark, path)
         if df is None:
             out[name] = []
             continue
@@ -1555,21 +1428,15 @@ def compact_index_batches(
         if len(cut) < 2:
             out[name] = []
             continue
-        target = cut[0]
-        staging = f"{path}__compact_staging"
         data_cols = [c for c in df.columns if c != "batch"]
         combined = (
             df.filter(F.col("batch").isin([int(b) for b in cut]))
             .select(*data_cols)
             .distinct()
         )
-        combined.write.mode("overwrite").parquet(staging)
-        spark.read.parquet(staging).write.mode("overwrite").parquet(
-            f"{path}/batch={target}"
-        )
+        commit(spark, f"{path}/batch={cut[0]}", combined.write.parquet)
         for b in cut[1:]:
-            _hadoop_delete(spark, f"{path}/batch={b}")
-        _hadoop_delete(spark, staging)
+            delete_path(spark, f"{path}/batch={b}")
         out[name] = cut
     return out
 
@@ -1608,118 +1475,3 @@ def compact_ann_index(
     return compact_index_batches(
         spark, index_path, keep_last_n, ("codes", "codes_pq")
     )
-
-
-def _purge_from_batched_tables(
-    spark: SparkSession, sub_tables, ids
-) -> dict:
-    """Shared purge engine for the ``batch=<id>``-partitioned index
-    layouts: anti-join each sub-table against the tombstone ids and
-    rewrite it through a staged copy (parquet reads are lazy —
-    overwriting the path being read would corrupt it), preserving the
-    batch partition column so replay exclusion keeps working. A table
-    whose rows are ALL purged is deleted outright (no-schema parquet
-    can't round-trip; absence is the empty state every reader of this
-    layout handles)."""
-    tomb = ids.toDF("__purge_id")
-    out = {}
-    for name, path, col in sub_tables:
-        df = _try_read_parquet(spark, path)
-        if df is None:
-            out[f"{name}_removed"] = 0
-            continue
-        before = df.count()
-        survivors = df.join(
-            tomb, df[col] == tomb["__purge_id"], "left_anti"
-        ).persist()
-        try:
-            n_surv = survivors.count()
-            if n_surv == 0:
-                # a fully-purged table can't round-trip through parquet (no
-                # rows → no schema to re-read); absence IS the empty state
-                # every reader of this layout already handles
-                _hadoop_delete(spark, path)
-            else:
-                staging = path.rstrip("/") + "__purge_staging"
-                survivors.write.mode("overwrite").partitionBy("batch").parquet(
-                    staging
-                )
-                spark.read.parquet(staging).write.mode("overwrite").partitionBy(
-                    "batch"
-                ).parquet(path)
-                _hadoop_delete(spark, staging)
-        finally:
-            survivors.unpersist()
-        out[f"{name}_removed"] = before - n_surv
-    return out
-
-
-def _hadoop_delete(spark: SparkSession, path: str) -> None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-
-
-def _hadoop_rename(spark: SparkSession, src: str, dst: str) -> bool:
-    """Directory rename via the Hadoop FS API — atomic per directory on
-    HDFS and local filesystems (NOT on S3, where rename is copy+delete;
-    an object-store deployment should front the swap with a manifest).
-    Returns the filesystem's success flag."""
-    jvm = spark._jvm
-    sp = jvm.org.apache.hadoop.fs.Path(src)
-    dp = jvm.org.apache.hadoop.fs.Path(dst)
-    fs = sp.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.rename(sp, dp))
-
-
-def staged_swap_commit(
-    spark: SparkSession, root: str, staging_root: str,
-    sub_tables: tuple[str, ...], op: str = "staged_swap_commit",
-) -> list[str]:
-    """Commit a fully-staged artifact over a live one, one rename per
-    sub-table (milliseconds, zero data bytes moved) — the shared swap
-    discipline of `ann_index.rebuild_ivf_index` and
-    `operators.bpe.retrain_bpe_vocab`.
-
-    Per table: live → ``<live>__old``, staged → live, delete ``__old``.
-    Hadoop FS reports most rename failures (dst exists, permission,
-    cross-FS) via a FALSE return, not an exception, so every rename's
-    flag is checked (ADVICE r13): a failed staged→live rename rolls the
-    live table back from ``__old`` and raises — never deletes ``__old``
-    (the only remaining copy) and never reports the table as swapped.
-    Returns the list of sub-tables actually swapped (those present in
-    staging)."""
-    swapped: list[str] = []
-    for name in sub_tables:
-        live = f"{root}/{name}"
-        staged = f"{staging_root}/{name}"
-        old = live + "__old"
-        _hadoop_delete(spark, old)
-        moved_aside = False
-        if hadoop_path_exists(spark, live):
-            if not _hadoop_rename(spark, live, old):
-                raise IOError(
-                    f"{op}: rename {live} -> {old} failed; live artifact "
-                    f"untouched, staging kept at {staging_root}"
-                )
-            moved_aside = True
-        if hadoop_path_exists(spark, staged):
-            if not _hadoop_rename(spark, staged, live):
-                # roll the live table back before raising — never delete
-                # __old here: it is the only remaining copy.
-                if moved_aside and not _hadoop_rename(spark, old, live):
-                    raise IOError(
-                        f"{op}: rename {staged} -> {live} failed AND "
-                        f"rollback {old} -> {live} failed — the sub-table "
-                        f"survives at {old}; restore it manually, staging "
-                        f"kept at {staging_root}"
-                    )
-                raise IOError(
-                    f"{op}: rename {staged} -> {live} failed; live table "
-                    f"rolled back, staging kept at {staging_root}"
-                )
-            swapped.append(name)
-        _hadoop_delete(spark, old)
-    _hadoop_delete(spark, staging_root)
-    return swapped

@@ -19,6 +19,7 @@ from spark_pipeline_spark.ann_index import (
     refresh_ivf_index,
 )
 from spark_pipeline_spark.queries import t
+from tests.commit_kill import CommitKilled, kill_commit, sidecar_residue
 from tests.conftest import SF_SMALL
 
 
@@ -271,7 +272,7 @@ def test_pq_search_lifecycle(spark, tmp_path):
         ivf_index_pq_stats,
         ivf_index_search_pq,
     )
-    from spark_pipeline_spark.streaming import _hadoop_delete
+    from spark_pipeline_spark.io.commit import delete_path
 
     e = _emb(spark)
     old = e.filter(F.col("vec_id") < 400)
@@ -327,21 +328,21 @@ def test_pq_search_lifecycle(spark, tmp_path):
     assert victim not in {r["neighbor_id"] for r in after.collect()}
 
     # pre-PQ index: drop the pq tables, refresh must not recreate them
-    _hadoop_delete(spark, path + "/pq_codebook")
-    _hadoop_delete(spark, path + "/codes_pq")
+    delete_path(spark, path + "/pq_codebook")
+    delete_path(spark, path + "/codes_pq")
     refresh_ivf_index(
         spark, e.filter(F.col("vec_id") < 0), path, batch_id=2
     )
-    from spark_pipeline_spark.ann_index import _try_read
+    from spark_pipeline_spark.io.commit import open_table
 
-    assert _try_read(spark, path + "/codes_pq") is None
+    assert open_table(spark, path + "/codes_pq") is None
     # and the PQ search over the de-PQ'd index is the empty state
     assert ivf_index_search_pq(spark, path, q, k=3).count() == 0
 
 
 def _index_snapshot(spark, root):
     """Every table's content as hashable sets (None for absent tables)."""
-    from spark_pipeline_spark.streaming import _try_read_parquet
+    from spark_pipeline_spark.io.commit import open_table
 
     out = {}
     for name, cols in (
@@ -351,7 +352,7 @@ def _index_snapshot(spark, root):
         ("pq_codebook", ("m", "code", "cv")),
         ("codes_pq", ("vec_id", "cell", "codes")),
     ):
-        df = _try_read_parquet(spark, f"{root}/{name}")
+        df = open_table(spark, f"{root}/{name}")
         if df is None:
             out[name] = None
             continue
@@ -420,11 +421,8 @@ def test_rebuild_equals_fresh_build_and_serves_during_staging(spark, tmp_path):
     after = ivf_index_search(spark, live, queries, k=3, nprobe=2)
     assert after.count() == queries.count() * 3
     assert spark.read.parquet(live + "/centroids").count() == 6
-    assert not os.path.exists(live + "__rebuild_staging")
-    assert not any(p.endswith("__old") for p in os.listdir(str(tmp_path)))
-    assert not any(
-        p.endswith("__old") for p in os.listdir(live)
-    )
+    assert sidecar_residue(tmp_path) == []
+    assert sorted(os.listdir(str(tmp_path))) == ["rb_fresh", "rb_live"]
 
 
 def test_rebuild_defaults_keep_shape_and_pq_drop(spark, tmp_path):
@@ -518,109 +516,103 @@ def test_failing_pq_m_rebuild_leaves_live_index_untouched(spark, tmp_path):
     assert _index_snapshot(spark, live) == before
 
 
-def test_rebuild_recovers_from_mid_commit_crash(spark, tmp_path):
-    """ADVICE r13: a crash between rename(assignments -> __old) and
-    rename(staged -> assignments) leaves no live assignments/. The next
-    rebuild must finish the interrupted rename and proceed — for both
-    leftover shapes (__old and a completed staging dir) — instead of
-    raising 'no assignments'."""
-    import os
-    import shutil
-
-    from spark_pipeline_spark.ann_index import rebuild_ivf_index
-
-    e = _emb(spark)
-
-    # shape 1: assignments moved aside to __old, staged not yet renamed
-    live = str(tmp_path / "cr_live")
-    build_ivf_index(spark, e.filter(F.col("vec_id") < 300), live, k_cells=4)
-    n_vecs = spark.read.parquet(live + "/assignments").count()
-    os.rename(live + "/assignments", live + "/assignments__old")
-    info = rebuild_ivf_index(spark, live)
-    assert info["n_vectors"] == n_vecs
-    assert spark.read.parquet(live + "/assignments").count() == n_vecs
-    assert not os.path.exists(live + "/assignments__old")
-
-    # shape 2: assignments gone, the completed staging dir holds it
-    live2 = str(tmp_path / "cr_live2")
-    build_ivf_index(spark, e.filter(F.col("vec_id") < 300), live2, k_cells=4)
-    staging = live2 + "__rebuild_staging"
-    os.makedirs(staging)
-    shutil.move(live2 + "/assignments", staging + "/assignments")
-    info2 = rebuild_ivf_index(spark, live2)
-    assert info2["n_vectors"] == n_vecs
-    assert spark.read.parquet(live2 + "/assignments").count() == n_vecs
-    assert not os.path.exists(staging)
-
-
-def test_rebuild_failed_commit_rename_rolls_back_and_raises(spark, tmp_path, monkeypatch):
-    """ADVICE r13 (medium): Hadoop FS reports most rename failures via a
-    FALSE return. A failed staged->live rename must roll the live table
-    back from __old and raise — never delete __old (the only remaining
-    copy) or report the table as swapped."""
+def test_rebuild_recovers_from_mid_commit_crash(spark, tmp_path, monkeypatch):
+    """A crash between rename(live root -> old) and rename(staged root ->
+    live) leaves no live index. The next rebuild must finish the
+    interrupted commit and proceed — rolling forward from the completed
+    staging root, or, when that copy is lost, back from the old root —
+    instead of raising 'no assignments'."""
     import os
 
     import pytest
 
-    from spark_pipeline_spark import streaming as streaming_mod
     from spark_pipeline_spark.ann_index import rebuild_ivf_index
+    from spark_pipeline_spark.io.commit import delete_path, sidecars
+
+    e = _emb(spark)
+    corpus = e.filter(F.col("vec_id") < 300)
+    n_vecs = corpus.count()
+
+    # shape 1: the completed staging root is promoted (roll forward)
+    live = str(tmp_path / "cr_live")
+    build_ivf_index(spark, corpus, live, k_cells=4)
+    with kill_commit(monkeypatch, 2), pytest.raises(CommitKilled):
+        rebuild_ivf_index(spark, live, k_cells=6)
+    assert not os.path.exists(live)
+    info = rebuild_ivf_index(spark, live)  # k_cells=None: the healed count
+    assert info["n_vectors"] == n_vecs and info["k_cells"] == 6
+    assert spark.read.parquet(live + "/assignments").count() == n_vecs
+
+    # shape 2: the staging root is lost; the old root is moved back
+    live2 = str(tmp_path / "cr_live2")
+    build_ivf_index(spark, corpus, live2, k_cells=4)
+    with kill_commit(monkeypatch, 2), pytest.raises(CommitKilled):
+        rebuild_ivf_index(spark, live2, k_cells=6)
+    delete_path(spark, sidecars(live2)[0])
+    info2 = rebuild_ivf_index(spark, live2)
+    assert info2["n_vectors"] == n_vecs and info2["k_cells"] == 4
+    assert spark.read.parquet(live2 + "/assignments").count() == n_vecs
+    assert sidecar_residue(tmp_path) == []
+
+
+def test_rebuild_failed_commit_rename_rolls_back_and_raises(spark, tmp_path, monkeypatch):
+    """Hadoop FS reports most rename failures via a FALSE return. A
+    failed staged->live rename must roll the live index back from the
+    old copy and raise — never delete the old copy (the only remaining
+    copy) or report the index as swapped."""
+    import os
+
+    import pytest
+
+    from spark_pipeline_spark.ann_index import rebuild_ivf_index
+    from spark_pipeline_spark.io import commit as commit_mod
+    from spark_pipeline_spark.io.commit import sidecars
 
     e = _emb(spark)
     live = str(tmp_path / "fail_live")
     build_ivf_index(spark, e.filter(F.col("vec_id") < 300), live, k_cells=4)
     before = _index_snapshot(spark, live)
 
-    real_rename = streaming_mod._hadoop_rename
+    real_rename = commit_mod._rename
 
-    def failing_rename(spark_, src, dst):
-        # fail exactly the staged->live rename of the assignments table
-        if src.endswith("__rebuild_staging/assignments"):
+    def failing_rename(fs, src, dst):
+        # fail exactly the staged->live rename of the index root
+        if src == sidecars(live)[0]:
             return False
-        return real_rename(spark_, src, dst)
+        return real_rename(fs, src, dst)
 
-    monkeypatch.setattr(streaming_mod, "_hadoop_rename", failing_rename)
+    monkeypatch.setattr(commit_mod, "_rename", failing_rename)
     with pytest.raises(IOError, match="rolled back"):
         rebuild_ivf_index(spark, live)
     monkeypatch.undo()
 
-    # live table survived (rolled back from __old), nothing deleted
+    # live index survived (rolled back from the old copy), nothing deleted
     assert os.path.exists(live + "/assignments")
-    assert not os.path.exists(live + "/assignments__old")
-    assert _index_snapshot(spark, live)["assignments"] == before["assignments"]
+    assert not os.path.exists(sidecars(live)[1])
+    assert _index_snapshot(spark, live) == before
 
 
-def test_rebuild_recovers_from_centroids_swap_crash(spark, tmp_path):
-    """ADVICE r14: centroids is swapped FIRST in staged_swap_commit, so
-    a crash in ITS rename window leaves no live centroids/ while
-    assignments is still the old copy. A re-run with default
-    k_cells=None must heal centroids from __old (or staging) instead of
-    dying in spark.read.parquet(cen_path) with a raw AnalysisException;
-    a mid-swap pq_codebook must likewise be healed rather than silently
-    rebuilding WITHOUT the PQ layer."""
-    import os
+def test_rebuild_recovers_from_centroids_swap_crash(spark, tmp_path, monkeypatch):
+    """The rebuild commits the whole root, so centroids, assignments and
+    the PQ layer can no longer be caught in different generations. A
+    crash in the commit's rename window heals as one: a re-run with
+    default k_cells=None reads the healed centroid count, and the PQ
+    layer survives instead of being silently rebuilt away."""
+    import pytest
 
     from spark_pipeline_spark.ann_index import rebuild_ivf_index
 
     e = _emb(spark)
-
-    # shape 1: centroids moved aside to __old (crash between its two
-    # renames); defaults must recover k_cells from the healed copy
     live = str(tmp_path / "cen_live")
-    build_ivf_index(spark, e.filter(F.col("vec_id") < 300), live, k_cells=4)
-    os.rename(live + "/centroids", live + "/centroids__old")
-    info = rebuild_ivf_index(spark, live)  # k_cells=None → healed read
-    assert info["k_cells"] == 4
-    assert not os.path.exists(live + "/centroids__old")
-    assert spark.read.parquet(live + "/centroids").count() == 4
-
-    # shape 2: pq_codebook mid-swap — the PQ layer must survive the
-    # rebuild, not be silently dropped because _try_read saw nothing
-    live2 = str(tmp_path / "cen_live2")
     build_ivf_index(
-        spark, e.filter(F.col("vec_id") < 300), live2, k_cells=4, pq_m=2
+        spark, e.filter(F.col("vec_id") < 300), live, k_cells=4, pq_m=2
     )
-    os.rename(live2 + "/pq_codebook", live2 + "/pq_codebook__old")
-    info2 = rebuild_ivf_index(spark, live2)
-    assert info2["pq_m"] == 2
-    assert os.path.exists(live2 + "/pq_codebook")
-    assert not os.path.exists(live2 + "/pq_codebook__old")
+    for step in (2, 3):
+        with kill_commit(monkeypatch, step), pytest.raises(CommitKilled):
+            rebuild_ivf_index(spark, live, k_cells=5 + step)
+        info = rebuild_ivf_index(spark, live)  # k_cells=None → healed read
+        assert info["k_cells"] == 5 + step
+        assert info["pq_m"] == 2
+        assert spark.read.parquet(live + "/centroids").count() == 5 + step
+        assert spark.read.parquet(live + "/pq_codebook").count() == 2 * 4
+    assert sidecar_residue(tmp_path) == []

@@ -221,8 +221,10 @@ def test_retrain_swaps_vocab_and_defaults_keep_merge_count(spark, tmp_path):
         for r in spark.read.parquet(fresh + "/merges").orderBy("step").collect()
     ]
     assert got_m == want_m
-    assert not os.path.exists(path + "__retrain_staging")
-    assert not any(p.endswith("__old") for p in os.listdir(path))
+    from tests.commit_kill import sidecar_residue
+
+    assert sidecar_residue(tmp_path) == []
+    assert sorted(os.listdir(str(tmp_path))) == ["fresh", "vocab"]
 
 
 def test_bpe_driver_gate_equals_distributed_rounds(spark):

@@ -18,6 +18,7 @@ from spark_pipeline_spark.graph_index import (
     dataset_fingerprint,
     load_neardup_graph_index,
 )
+from tests.commit_kill import sidecar_residue
 
 
 def _docs(spark):
@@ -44,8 +45,9 @@ def test_build_load_roundtrip_and_staleness(spark, tmp_path):
     idx = build_neardup_graph_index(spark, d, path, "fp-v1")
     assert set(idx) == {"shingles", "bands", "edges", "components",
                        "communities"}
-    # no staging residue after publish
-    assert not [p for p in os.listdir(str(tmp_path)) if "__staging" in p]
+    # no staging residue after the commit
+    assert sidecar_residue(tmp_path) == []
+    assert os.listdir(str(tmp_path)) == ["gidx"]
 
     # loaded = built (same live tables)
     loaded = load_neardup_graph_index(spark, path, "fp-v1")
@@ -145,8 +147,10 @@ def test_stored_state_plus_delta_equals_batch(spark, tmp_path):
 
 
 def test_stale_staging_leftovers_are_clobbered(spark, tmp_path):
+    from spark_pipeline_spark.io.commit import sidecars
+
     path = str(tmp_path / "gidx_crash")
-    staging = path + "__staging_" + spark.sparkContext.applicationId
+    staging = sidecars(path)[0]
     os.makedirs(staging + "/edges")
     with open(staging + "/edges/garbage", "w") as fh:
         fh.write("not parquet")

@@ -270,9 +270,12 @@ def test_file_stats_and_compact_parquet(spark, tmp_path):
     assert after["total_bytes"] > 0
     # no rows lost, values intact
     assert sorted(r["id"] for r in spark.read.parquet(p).collect()) == list(range(10_000))
-    # staging cleaned up
+    # no staging or old copy left behind
     import os
-    assert not os.path.exists(p + "__compact_staging")
+
+    from tests.commit_kill import sidecar_residue
+    assert sidecar_residue(tmp_path) == []
+    assert os.listdir(str(tmp_path)) == ["frag"]
 
 
 def test_compact_parquet_partitioned_preserves_layout(spark, tmp_path):
@@ -532,20 +535,24 @@ def test_refresher_cli_bootstrap_then_merge(spark, tmp_path):
         .collect()
     }
     assert got == want
-    # staging is KEPT as the recovery copy and matches the snapshot
-    staging = snap + "__refresh_staging"
-    assert spark.read.parquet(staging).count() == spark.read.parquet(snap).count()
+    # the commit renamed its staging copy into place: nothing is left
+    from tests.commit_kill import sidecar_residue
+
+    assert sidecar_residue(tmp_path) == []
 
 
 def test_refresher_recovers_torn_snapshot_and_skips_replayed_delta(
-    spark, tmp_path, capsys
+    spark, tmp_path, capsys, monkeypatch
 ):
-    """Crash mid-rewrite (snapshot torn, staging committed) must restore
-    from staging instead of silently bootstrapping from the delta; and a
-    rerun with the same delta-id must be a no-op, not a double merge."""
-    import shutil
+    """A crash between the commit's renames (no live snapshot, staging
+    committed) must roll the commit forward instead of silently
+    bootstrapping from the delta; and a rerun with the same delta-id
+    must be a no-op, not a double merge."""
+    import os
 
     from pyspark.sql import functions as F
+
+    from tests.commit_kill import CommitKilled, kill_commit, sidecar_residue
 
     from spark_pipeline_spark.cli import main_refresher
     from spark_pipeline_spark.queries import t as _t
@@ -573,24 +580,28 @@ def test_refresher_recovers_torn_snapshot_and_skips_replayed_delta(
         )
 
     assert main_refresher(["--conf", conf_for(d1, "day1")]) == 0
-    assert main_refresher(["--conf", conf_for(d2, "day2")]) == 0
     want = {
         r["o_orderstatus"]: r["n_orders"]
-        for r in spark.read.parquet(snap).collect()
+        for r in o.groupBy("o_orderstatus").agg(
+            F.count("o_orderkey").alias("n_orders")
+        ).collect()
     }
 
-    # simulate the rewrite crash: snapshot destroyed, staging committed
-    shutil.rmtree(snap)
+    # the crash: day2's commit dies after moving the live snapshot aside
+    with kill_commit(monkeypatch, 2), pytest.raises(CommitKilled):
+        main_refresher(["--conf", conf_for(d2, "day2")])
+    assert not os.path.exists(snap)
     capsys.readouterr()
     assert main_refresher(["--conf", conf_for(d2, "day2")]) == 0
     out = capsys.readouterr().out
-    assert "recovered snapshot from staging" in out
+    assert "recovered snapshot" in out
     assert "already applied: no-op" in out  # day2 was already merged
     got = {
         r["o_orderstatus"]: r["n_orders"]
         for r in spark.read.parquet(snap).collect()
     }
     assert got == want  # history intact, delta NOT double-counted
+    assert sidecar_residue(tmp_path) == []
 
     # replaying day2 again on a healthy snapshot is also a no-op
     assert main_refresher(["--conf", conf_for(d2, "day2")]) == 0

@@ -278,7 +278,7 @@ def test_committed_snapshot_exists_distinguishes_crash_debris(spark, tmp_path):
     """A bare directory (crashed overwrite debris) must read as 'no
     snapshot' so the upsert sink restarts as first-batch instead of
     wedging; a committed write must read as present."""
-    from spark_pipeline_spark.streaming import (
+    from spark_pipeline_spark.io.commit import (
         committed_snapshot_exists,
         hadoop_path_exists,
     )
@@ -440,48 +440,50 @@ def test_replay_guarded_swap_skips_replayed_batch(spark, tmp_path):
     assert got == {"a": (11.0, 2), "b": (2.0, 1)}  # 10.0 merged ONCE
 
 
-def test_replay_guarded_swap_recovers_crashed_overwrite(spark, tmp_path):
-    """Target dir with only _temporary debris + committed staging copy =
-    a crash mid-final-overwrite. The sink must restore the staging copy
-    (not silently restart as first-batch, not wedge) and still apply the
-    replayed batch exactly once."""
+def test_replay_guarded_swap_recovers_crashed_overwrite(spark, tmp_path, monkeypatch):
+    """A crash between the commit's two renames leaves no live snapshot,
+    only the committed staging copy — here with a crashed overwrite's
+    ``_temporary`` debris at the target path too. The replayed batch
+    must roll the commit forward (not silently restart as first-batch,
+    not wedge), skip the merge it already holds, and the NEXT batch
+    merges on top."""
+    import pytest as _pytest
+
+    from spark_pipeline_spark.io.commit import sidecars
     from spark_pipeline_spark.streaming import (
         SNAPSHOT_BATCH_COL,
         _replay_guarded_swap,
     )
+    from tests.commit_kill import CommitKilled, kill_commit, sidecar_residue
 
-    target = tmp_path / "snap"
+    target = str(tmp_path / "snap")
     b0 = spark.createDataFrame([("a", 1.0)], "k string, value double")
     b1 = spark.createDataFrame([("a", 10.0), ("b", 5.0)], "k string, value double")
-    _replay_guarded_swap(spark, str(target), 0, _inc_merge_fn(b0, ["k"], _SPEC))
-    _replay_guarded_swap(spark, str(target), 1, _inc_merge_fn(b1, ["k"], _SPEC))
+    _replay_guarded_swap(spark, target, 0, _inc_merge_fn(b0, ["k"], _SPEC))
+    with kill_commit(monkeypatch, 2), _pytest.raises(CommitKilled):
+        _replay_guarded_swap(spark, target, 1, _inc_merge_fn(b1, ["k"], _SPEC))
+    import os
 
-    # simulate the crash: staging committed at batch 1, target destroyed
-    # mid-overwrite (only _temporary left)
-    import shutil
+    assert not os.path.exists(target) and os.path.exists(sidecars(target)[0])
+    os.makedirs(target + "/_temporary")
 
-    shutil.rmtree(target)
-    target.mkdir()
-    (target / "_temporary").mkdir()
-
-    # replay of batch 1 -> restore from staging, merge skipped
-    _replay_guarded_swap(spark, str(target), 1, _inc_merge_fn(b1, ["k"], _SPEC))
+    # replay of batch 1 -> roll forward from staging, merge skipped
+    _replay_guarded_swap(spark, target, 1, _inc_merge_fn(b1, ["k"], _SPEC))
     got = {
         r["k"]: (r["total"], r["n"])
-        for r in spark.read.parquet(str(target)).collect()
+        for r in spark.read.parquet(target).collect()
     }
     assert got == {"a": (11.0, 2), "b": (5.0, 1)}
-    last = (
-        spark.read.parquet(str(target)).agg(F.max(SNAPSHOT_BATCH_COL)).first()[0]
-    )
+    last = spark.read.parquet(target).agg(F.max(SNAPSHOT_BATCH_COL)).first()[0]
     assert last == 1
+    assert sidecar_residue(tmp_path) == []
 
     # and the NEXT batch merges on top of the restored snapshot
     b2 = spark.createDataFrame([("b", 1.0)], "k string, value double")
-    _replay_guarded_swap(spark, str(target), 2, _inc_merge_fn(b2, ["k"], _SPEC))
+    _replay_guarded_swap(spark, target, 2, _inc_merge_fn(b2, ["k"], _SPEC))
     got = {
         r["k"]: (r["total"], r["n"])
-        for r in spark.read.parquet(str(target)).collect()
+        for r in spark.read.parquet(target).collect()
     }
     assert got == {"a": (11.0, 2), "b": (6.0, 2)}
 
@@ -529,7 +531,7 @@ def test_fs_helpers_work_without_jvm_gateway(spark, tmp_path):
     """Spark Connect sessions expose no _jvm gateway: both FS helpers
     must fall back to the binaryFile read-probe (analysis-only, no file
     content) and return the same answers as the Hadoop FS API path."""
-    from spark_pipeline_spark.streaming import (
+    from spark_pipeline_spark.io.commit import (
         committed_snapshot_exists,
         hadoop_path_exists,
     )
@@ -568,32 +570,60 @@ def test_fs_helpers_work_without_jvm_gateway(spark, tmp_path):
     assert committed_snapshot_exists(fake, str(torn)) is False
     assert committed_snapshot_exists(spark, str(torn)) is False
 
+    # the sink's commit runs on Connect too: no rename there, so live is
+    # rewritten from the staging copy, which stays as the recovery copy
+    import os
+    import shutil
 
-def test_replay_guarded_swap_merges_when_staging_ahead_of_target(spark, tmp_path):
-    """Crash AFTER the staging write but BEFORE the target overwrite:
-    target still holds batch N-1 (committed), staging holds batch N.
-    The replay of batch N must merge from the committed target — once —
-    and the stale-vs-fresh staging must not confuse it."""
+    import pytest as _pytest
+
+    from spark_pipeline_spark.io.commit import sidecars
     from spark_pipeline_spark.streaming import _replay_guarded_swap
 
+    def snap(path):
+        return {r["k"]: (r["total"], r["n"]) for r in spark.read.parquet(path).collect()}
+
+    target = str(tmp_path / "connect_snap")
+    b0 = spark.createDataFrame([("a", 1.0)], "k string, value double")
+    b1 = spark.createDataFrame([("a", 10.0), ("b", 5.0)], "k string, value double")
+    _replay_guarded_swap(fake, target, 0, _inc_merge_fn(b0, ["k"], _SPEC))
+    _replay_guarded_swap(fake, target, 1, _inc_merge_fn(b1, ["k"], _SPEC))
+    want = {"a": (11.0, 2), "b": (5.0, 1)}
+    assert snap(target) == want == snap(sidecars(target)[0])
+    # a crash mid-rewrite tears live: the replay restores it from the
+    # recovery copy and skips the batch it already holds
+    shutil.rmtree(target)
+    os.makedirs(target + "/_temporary")
+    _replay_guarded_swap(fake, target, 1, _inc_merge_fn(b1, ["k"], _SPEC))
+    assert snap(target) == want
+    # debris with no recovery copy is refused
+    shutil.rmtree(sidecars(target)[0])
+    shutil.rmtree(target)
+    os.makedirs(target + "/_temporary")
+    with _pytest.raises(RuntimeError, match="crashed overwrite debris"):
+        _replay_guarded_swap(fake, target, 2, _inc_merge_fn(b1, ["k"], _SPEC))
+
+
+def test_replay_guarded_swap_merges_when_staging_ahead_of_target(spark, tmp_path, monkeypatch):
+    """Crash AFTER the staging write but BEFORE the first rename: the
+    target still holds batch N-1 (committed), staging holds batch N.
+    The replay of batch N must merge from the committed target — once —
+    and the complete-but-uncommitted staging copy must not confuse it."""
+    import pytest as _pytest
+
+    from spark_pipeline_spark.io.commit import sidecars
+    from spark_pipeline_spark.streaming import _replay_guarded_swap
+    from tests.commit_kill import CommitKilled, kill_commit, sidecar_residue
+
     target = str(tmp_path / "snap")
-    staging = target + "__staging"
     b0 = spark.createDataFrame([("a", 1.0)], "k string, value double")
     b1 = spark.createDataFrame([("a", 10.0)], "k string, value double")
     _replay_guarded_swap(spark, target, 0, _inc_merge_fn(b0, ["k"], _SPEC))
+    with kill_commit(monkeypatch, 1), _pytest.raises(CommitKilled):
+        _replay_guarded_swap(spark, target, 1, _inc_merge_fn(b1, ["k"], _SPEC))
+    import os
 
-    # simulate: staging for batch 1 committed, target untouched at batch 0
-    from spark_pipeline_spark.operators.incremental import (
-        aggregate_snapshot,
-        incremental_agg_merge,
-    )
-    from spark_pipeline_spark.streaming import SNAPSHOT_BATCH_COL
-
-    cur = spark.read.parquet(target).drop(SNAPSHOT_BATCH_COL)
-    merged = incremental_agg_merge(cur, b1, ["k"], _SPEC).withColumn(
-        SNAPSHOT_BATCH_COL, F.lit(1)
-    )
-    merged.write.mode("overwrite").parquet(staging)
+    assert os.path.exists(sidecars(target)[0] + "/_SUCCESS")
 
     _replay_guarded_swap(spark, target, 1, _inc_merge_fn(b1, ["k"], _SPEC))
     got = {
@@ -601,30 +631,38 @@ def test_replay_guarded_swap_merges_when_staging_ahead_of_target(spark, tmp_path
         for r in spark.read.parquet(target).collect()
     }
     assert got == {"a": (11.0, 2)}
+    assert sidecar_residue(tmp_path) == []
 
 
-def test_replay_guarded_swap_restores_when_target_fully_absent(spark, tmp_path):
-    """Crash DURING the target overwrite can also leave the target path
-    deleted outright (overwrite removes before writing). With a
-    committed staging copy the state must be recovered, not treated as
-    first-batch."""
-    import shutil
+def test_replay_guarded_swap_restores_when_target_fully_absent(spark, tmp_path, monkeypatch):
+    """A crash between the commit's renames leaves the target path
+    absent, with the old copy and the committed staging copy beside it.
+    The state must be recovered (history included, NOT just batch 1),
+    not treated as first-batch, and both sidecars dropped."""
+    import pytest as _pytest
 
+    from spark_pipeline_spark.io.commit import sidecars
     from spark_pipeline_spark.streaming import _replay_guarded_swap
+    from tests.commit_kill import CommitKilled, kill_commit, sidecar_residue
 
-    target = tmp_path / "snap"
+    target = str(tmp_path / "snap")
     b0 = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, value double")
     b1 = spark.createDataFrame([("a", 10.0)], "k string, value double")
-    _replay_guarded_swap(spark, str(target), 0, _inc_merge_fn(b0, ["k"], _SPEC))
-    _replay_guarded_swap(spark, str(target), 1, _inc_merge_fn(b1, ["k"], _SPEC))
-    shutil.rmtree(target)  # overwrite-in-flight removed the directory
+    _replay_guarded_swap(spark, target, 0, _inc_merge_fn(b0, ["k"], _SPEC))
+    with kill_commit(monkeypatch, 2), _pytest.raises(CommitKilled):
+        _replay_guarded_swap(spark, target, 1, _inc_merge_fn(b1, ["k"], _SPEC))
+    import os
 
-    _replay_guarded_swap(spark, str(target), 1, _inc_merge_fn(b1, ["k"], _SPEC))
+    assert not os.path.exists(target)
+    assert all(os.path.exists(p) for p in sidecars(target))
+
+    _replay_guarded_swap(spark, target, 1, _inc_merge_fn(b1, ["k"], _SPEC))
     got = {
         r["k"]: (r["total"], r["n"])
-        for r in spark.read.parquet(str(target)).collect()
+        for r in spark.read.parquet(target).collect()
     }
     assert got == {"a": (11.0, 2), "b": (2.0, 1)}  # NOT just batch 1
+    assert sidecar_residue(tmp_path) == []
 
 
 def test_replay_guarded_swap_accepts_legacy_snapshot_without_batch_col(spark, tmp_path):
