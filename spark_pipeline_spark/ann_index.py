@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_pipeline_spark.gate import local_frame
-from spark_pipeline_spark.io.commit import commit, open_table, require_jvm
+from spark_pipeline_spark.io.commit import commit, heal, open_table, require_jvm
 
 __all__ = [
     "build_ivf_index",
@@ -494,6 +494,7 @@ def refresh_ivf_index(
     from spark_pipeline_spark.operators.similarity import ivf_assign
 
     cen_path, asg_path, _ = _paths(index_path)
+    heal(spark, index_path)  # the root and its tables, before appending
     cen = open_table(spark, cen_path)
     if cen is None:
         raise ValueError(
@@ -600,8 +601,9 @@ def rebuild_ivf_index(
     LIVE tables are never touched, so in-flight searches keep reading
     a fully consistent old index for the entire (expensive) retrain;
     the commit is one rename pair (no data movement). A crash at any
-    point leaves either the old or the new root, and the next open of
-    the index finishes an interrupted commit (`io.commit`). The commit
+    point leaves either the old or the new root: searches read whichever
+    the commit rolls to, and the next writer of the index (refresh,
+    purge, rebuild) finishes the commit (`io.commit.heal`). The commit
     replaces everything under the root: a `stream_ann_refresh_sink`'s
     ``stream_base`` marker is re-derived on its next batch.
 
@@ -618,15 +620,18 @@ def rebuild_ivf_index(
     ``swapped`` lists the tables the committed root holds.
 
     Caller contract: quiesce refresh/purge writers for the swap (same
-    as compaction); searches need no quiesce. vec_ids are unique
-    across batches by the refresh/purge contract, so the corpus read
-    needs no dedup. Scale: one full-corpus scan + the standard build
-    (centroids broadcast, corpus never shuffles except the k-means
-    aggregates); the commit moves zero data bytes."""
+    as compaction). Searches need no quiesce and never change the
+    index; a search that lists the live tables just before the rename
+    pair can fail on the moved files, and can then be retried. vec_ids
+    are unique across batches by the refresh/purge contract, so the
+    corpus read needs no dedup. Scale: one full-corpus scan + the
+    standard build (centroids broadcast, corpus never shuffles except
+    the k-means aggregates); the commit moves zero data bytes."""
     from spark_pipeline_spark.session import cached
 
     root = index_path.rstrip("/")
     cen_path, asg_path, _ = _paths(root)
+    heal(spark, root)  # the corpus read below must not move under the build
     corpus = open_table(spark, asg_path)
     if corpus is None:
         raise ValueError(

@@ -676,11 +676,7 @@ def main_refresher(argv: list[str] | None = None) -> int:
     spark = _session(conf, "refresher")
     from pyspark.sql import functions as F
 
-    from spark_pipeline_spark.io.commit import (
-        commit,
-        committed_snapshot_exists,
-        open_table,
-    )
+    from spark_pipeline_spark.io.commit import commit, heal, open_table
     from spark_pipeline_spark.io.sources import load
     from spark_pipeline_spark.operators.incremental import (
         aggregate_snapshot,
@@ -702,10 +698,9 @@ def main_refresher(argv: list[str] | None = None) -> int:
         )
     path = conf["snapshot"]["path"]
 
-    interrupted = not committed_snapshot_exists(spark, path)
-    snap_full = open_table(spark, path)  # finishes an interrupted commit
-    if interrupted and snap_full is not None:
+    if heal(spark, path):
         print("recovered snapshot from an interrupted commit")
+    snap_full = open_table(spark, path)
 
     applied: list[str] = []
     if snap_full is not None:

@@ -31,9 +31,10 @@ the mismatched-index refusal they have on in-memory tables.
 Commit discipline: the whole index is written once into a staging
 root and renamed into place by `io.commit.commit` — readers see the
 previous index or the complete new one, never a partial build (the
-manifest rides inside the same rename), and the next open finishes a
-commit a crash interrupted. One builder per path at a time: the
-registry keys the path by session (`applicationId`).
+manifest rides inside the same rename). A commit a crash interrupted
+loads as absent until the next build's commit finishes it. One builder
+per path at a time: the registry keys the path by session
+(`applicationId`).
 
 Staleness: ``load_neardup_graph_index`` returns ``None`` unless the
 manifest's ``(version, fingerprint)`` matches the caller's — callers
@@ -61,7 +62,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_pipeline_spark.gate import local_frame
-from spark_pipeline_spark.io.commit import commit, open_table, require_jvm
+from spark_pipeline_spark.io.commit import (
+    commit,
+    hadoop_path_exists,
+    open_table,
+    require_jvm,
+)
 
 GRAPH_INDEX_VERSION = 1
 
@@ -121,11 +127,13 @@ def load_neardup_graph_index(
     through the session schema memo (`read_parquet_catalog`) — the
     artifact path is session-keyed, so its schema is stable for the
     process lifetime."""
-    if _manifest_fingerprint(spark, path) != (GRAPH_INDEX_VERSION, fingerprint):
+    root = path.rstrip("/")
+    if not hadoop_path_exists(spark, root):
+        return None  # absent, or an unfinished commit the next build heals
+    if _manifest_fingerprint(spark, root) != (GRAPH_INDEX_VERSION, fingerprint):
         return None
     from spark_pipeline_spark.session import read_parquet_catalog
 
-    root = path.rstrip("/")
     return {
         name: read_parquet_catalog(spark, f"{root}/{name}")
         for name in tables

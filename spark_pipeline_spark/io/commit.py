@@ -1,7 +1,7 @@
 """One way to commit a persisted artifact: write once, then rename.
 
 Every artifact the package replaces in place commits through
-:func:`commit` and is opened through :func:`open_table`: the streaming
+:func:`commit` and is read through :func:`open_table`: the streaming
 sinks' snapshots, the refresher snapshot, purge and compaction output,
 the IVF index, the BPE vocabulary and the near-dup graph index. This is
 the only module that touches the Hadoop FileSystem API.
@@ -22,19 +22,23 @@ rename, which is atomic per directory on HDFS and local filesystems (on
 an object store a rename is copy + delete; put a table format in front
 of such a deployment).
 
-A crash leaves one of three states, and the next :func:`open_table` of
-the path finishes it, whether a writer or a reader opens it:
+A crash leaves one of three states. :func:`heal` finishes it, and every
+writer (the sinks' batches, refresh, purge, compaction, expiry, build
+and rebuild) calls it before it opens what it replaces or appends to:
 
 - after step 1 live is intact: the complete staging copy is dropped;
 - after step 2 live is missing: the complete staging copy is promoted
   (roll forward), or else the old copy is moved back;
 - after step 3 live is new: the old copy is dropped.
 
-An open never promotes or deletes an unmarked staging copy, because a
-writer may still be producing it. An open that drops a complete staging
-copy in the moment before its writer's first rename makes that commit's
-staging -> live rename fail, which rolls back and raises; live is never
-torn. One writer per artifact at a time is the caller's contract.
+Healing never promotes or deletes an unmarked staging copy. It renames
+and deletes, so writers of one artifact run one at a time; that is the
+caller's contract. Readers need no coordination: :func:`open_table`
+changes nothing. Until a writer heals, it reads the copy a heal would
+keep (the complete staging copy, else the old copy), so a reader after a
+crash sees exactly the old or the new content. A reader that races the
+renames of a live commit can find the files it listed moved; it then
+fails and the read can be retried.
 
 The sidecars start with a dot, so Spark's file listing skips them. A
 commit of one partition directory (compaction commits ``batch=<id>``)
@@ -42,14 +46,15 @@ keeps its sidecars inside the table without readers seeing them: a
 visible ``batch=2__old`` would turn the ``batch`` partition column into
 a string for every reader. The commit unit may be an artifact root (the
 IVF index, the BPE vocabulary, the graph index), a table, or one
-partition directory; :func:`open_table` heals all three levels around
-the path it opens.
+partition directory; :func:`heal` and :func:`open_table` handle all
+three levels around the path they are given.
 
 Spark Connect sessions have no ``spark._jvm`` and cannot rename. There
 :func:`commit` rewrites live from the staging copy and keeps that copy as
-the recovery copy, and :func:`open_table` restores live from it after a
-crash mid-rewrite. Only flat snapshot commits run there; the artifacts
-that rename call :func:`require_jvm` before they write anything.
+the recovery copy: :func:`open_table` reads it while live is torn, and
+:func:`heal` restores live from it. Only flat table commits run there;
+the artifacts that rename a root or a partition call :func:`require_jvm`
+before they write anything.
 """
 
 from __future__ import annotations
@@ -61,6 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "commit",
+    "heal",
     "open_table",
     "sidecars",
     "require_jvm",
@@ -206,18 +212,19 @@ def _read(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def _heal(fs: _Fs, live: str) -> None:
-    """Finish an interrupted commit of ``live`` (module docstring)."""
+def _heal(fs: _Fs, live: str) -> bool:
+    """Finish an interrupted commit of ``live`` (module docstring); True
+    when live was restored from a sidecar."""
     staging, old = sidecars(live)
     has_old = fs.exists(old)
     ready = fs.exists(staging + "/_SUCCESS")
     if not (has_old or ready):
-        return
+        return False
     if fs.committed(live):
         fs.delete(old)
         if ready:
             fs.delete(staging)
-        return
+        return False
     src = staging if ready else old
     fs.delete(live)  # crashed-overwrite debris, if any
     if not _rename(fs, src, live) and not fs.committed(live):
@@ -225,6 +232,41 @@ def _heal(fs: _Fs, live: str) -> None:
             f"could not restore {live!r} from {src!r}: move it back by hand"
         )
     fs.delete(old)
+    return True
+
+
+def _children(fs: _Fs, live: str) -> list[str]:
+    """Names of the directories under ``live`` that have sidecars."""
+    return sorted({
+        p.rpartition("/")[2][1:].rpartition("__")[0]
+        for p in fs.glob(_escape(live) + "/.*__{staging,old}")
+    })
+
+
+def heal(spark: SparkSession, path: str) -> bool:
+    """Finish any interrupted commit around ``path``: of its parent
+    directory (an artifact committed as a whole root), of ``path``
+    itself, and of the directories under it (a table's partitions, or a
+    root's tables). True when something was restored from a sidecar.
+
+    Writers only: call it before opening what you are about to replace
+    or append to. It renames and deletes sidecars, so it must not run
+    beside another writer's commit of the same artifact; readers use
+    :func:`open_table`, which changes nothing."""
+    live = path.rstrip("/")
+    if getattr(spark, "_jvm", None) is None:
+        staging = sidecars(live)[0]
+        if _read(spark, live) is not None or _read(spark, staging) is None:
+            return False
+        spark.read.parquet(staging).write.mode("overwrite").parquet(live)
+        return True
+    fs = _Fs(spark, live)
+    parent = live.rpartition("/")[0]
+    healed = not _FS_ROOT.fullmatch(parent) and _heal(fs, parent)
+    healed = _heal(fs, live) or healed
+    for name in _children(fs, live):
+        healed = _heal(fs, f"{live}/{name}") or healed
+    return healed
 
 
 def _debris(live: str) -> RuntimeError:
@@ -235,39 +277,79 @@ def _debris(live: str) -> RuntimeError:
     )
 
 
+class _Moved(Exception):
+    """A sidecar an open was reading was renamed by a commit."""
+
+
+def _copy(fs: _Fs, live: str) -> str | None:
+    """Where ``live``'s committed content sits while a commit of it is
+    unfinished: the complete staging copy (the commit rolls forward),
+    else the old copy; None when there is neither."""
+    staging, old = sidecars(live)
+    if fs.exists(staging + "/_SUCCESS"):
+        return staging
+    return old if fs.exists(old) else None
+
+
+def _read_copy(spark: SparkSession, fs: _Fs, src: str, root: str):
+    """``_read(src)``, raising :class:`_Moved` when ``src``'s sidecar
+    ``root`` was renamed away in the meantime."""
+    df = _read(spark, src)
+    if df is None and not fs.exists(root):
+        raise _Moved(src)
+    return df
+
+
+def _open(spark: SparkSession, fs: _Fs, live: str) -> DataFrame | None:
+    from pyspark.sql import functions as F
+
+    df = _read(spark, live)
+    if df is None:
+        src = _copy(fs, live)
+        if src is not None:
+            return _read_copy(spark, fs, src, src)
+        parent, _, name = live.rpartition("/")
+        if not _FS_ROOT.fullmatch(parent) and not fs.exists(parent):
+            src = _copy(fs, parent)
+            if src is not None:
+                return _read_copy(spark, fs, f"{src}/{name}", src)
+        if fs.exists(live + "/_temporary"):
+            raise _debris(live)
+        return None
+    # a partition directory moved aside by an unfinished commit
+    for name in _children(fs, live):
+        col, eq, value = name.partition("=")
+        src = None if not eq or fs.exists(f"{live}/{name}") else _copy(fs, f"{live}/{name}")
+        part = None if src is None else _read_copy(spark, fs, src, src)
+        if part is not None and col in df.columns:
+            part = part.withColumn(col, F.lit(value).cast(df.schema[col].dataType))
+            df = df.unionByName(part).select(*df.columns)
+    return df
+
+
 def open_table(spark: SparkSession, path: str) -> DataFrame | None:
     """The committed parquet table at ``path``, or None when it is absent.
 
-    First finishes any interrupted commit around ``path``: of its parent
-    directory (an artifact committed as a whole root), of ``path`` itself,
-    and of its partition directories. Raises on crashed-overwrite debris
-    (only ``_temporary`` left) that no sidecar can restore."""
+    Read-only: it never renames or deletes anything. Where a commit of
+    ``path``, of its parent root or of one of its partitions is unfinished
+    (crashed, or in flight), it reads the copy the commit rolls forward
+    to, else the old copy. Raises on crashed-overwrite debris (only
+    ``_temporary`` left) with no copy to read."""
     live = path.rstrip("/")
     if getattr(spark, "_jvm", None) is None:
         df = _read(spark, live)
         if df is None:
-            staging = sidecars(live)[0]
-            if _read(spark, staging) is not None:
-                spark.read.parquet(staging).write.mode("overwrite").parquet(live)
-                return _read(spark, live)
-            if _path_exists_via_read(spark, live + "/_temporary"):
+            df = _read(spark, sidecars(live)[0])  # the recovery copy
+            if df is None and _path_exists_via_read(spark, live + "/_temporary"):
                 raise _debris(live)
         return df
     fs = _Fs(spark, live)
-    parent = live.rpartition("/")[0]
-    if not _FS_ROOT.fullmatch(parent):
-        _heal(fs, parent)
-    _heal(fs, live)
-    children = {
-        p.rpartition("/")[2][1:].rpartition("__")[0]
-        for p in fs.glob(_escape(live) + "/.*__{staging,old}")
-    }
-    for name in sorted(children):
-        _heal(fs, f"{live}/{name}")
-    df = _read(spark, live)
-    if df is None and fs.exists(live + "/_temporary"):
-        raise _debris(live)
-    return df
+    for _ in range(3):
+        try:
+            return _open(spark, fs, live)
+        except _Moved:
+            continue  # a commit renamed the copy we were reading: look again
+    raise IOError(f"{live!r} kept moving while it was opened; retry the read")
 
 
 def commit(
@@ -276,7 +358,9 @@ def commit(
     """Replace the directory ``live`` with what ``write(staging)`` writes.
 
     ``write`` is called exactly once, with the staging path, and may read
-    ``live`` (lazily or not): live is untouched until it returns. On a
+    ``live`` (lazily or not): live is untouched until it returns. A
+    writer that reads live opens it after :func:`heal`, so what it read
+    is not moved under it by the heal this commit starts with. On a
     classic session the staging copy then becomes live by rename and is
     never read back (if ``write`` raises, the staging copy is removed and
     live stays as it was); on Spark Connect live is rewritten from it."""
@@ -301,7 +385,9 @@ def commit(
     if not _rename(fs, staging, live) and (
         fs.exists(staging) or not fs.committed(live)
     ):
-        # staging still there (or live empty): the rename really failed.
+        # A False flag with staging gone and live committed means the
+        # staged copy was already promoted (a heal ran in between): done.
+        # Otherwise staging is still there (or live empty): it failed.
         # Put the old copy back; never delete it, it is the only copy.
         if moved and not _rename(fs, old, live):
             raise IOError(
@@ -309,6 +395,7 @@ def commit(
                 f"rollback {old} -> {live}; the previous copy survives at "
                 f"{old}: move it back by hand"
             )
+        fs.delete(staging)
         raise IOError(
             f"commit: rename {staging} -> {live} failed; live rolled back"
         )

@@ -32,6 +32,7 @@ from spark_pipeline_spark.io.commit import (
     commit,
     delete_path,
     filesystem,
+    heal,
     open_table,
     require_jvm,
 )
@@ -125,6 +126,7 @@ def compact_parquet(
     # Hadoop FS API
     require_jvm(spark, "compact_parquet")
 
+    heal(spark, path)
     df = open_table(spark, path)
     before = file_stats(spark, path)
     if df is None or before["n_files"] < min_skip_files:
@@ -155,6 +157,7 @@ def purge_ids_from_tables(
     tomb = ids.toDF("__purge_id")
     out = {}
     for name, path, col, parts in tables:
+        heal(spark, path)
         df = open_table(spark, path)
         if df is None:
             out[f"{name}_removed"] = 0

@@ -257,10 +257,11 @@ def build_bpe_vocab(
     The three tables commit together: written once under a staging
     root, then one rename pair replaces the vocab root
     (`io.commit.commit`), so a reader never sees merges of one build
-    with symbols of another. Returns the stats row as a dict."""
-    from spark_pipeline_spark.io.commit import commit, require_jvm
+    with symbols of another. Spark Connect cannot rename, so there each
+    table commits on its own (a crash between them can mix builds).
+    Returns the stats row as a dict."""
+    from spark_pipeline_spark.io.commit import commit
 
-    require_jvm(spark, "build_bpe_vocab")
     merges, sym = bpe_train(words, n_merges, term_col, count_col)
     mdf = local_frame(
         spark,
@@ -277,13 +278,16 @@ def build_bpe_vocab(
         F.round(F.col("total_pieces") / F.col("total_words"), 6),
     )
 
-    def write(staging: str) -> None:
-        m_path, s_path, st_path = _vocab_paths(staging)
-        mdf.coalesce(1).write.parquet(m_path)
-        sym.write.parquet(s_path)
-        stats_row.coalesce(1).write.parquet(st_path)
+    frames = (mdf.coalesce(1), sym, stats_row.coalesce(1))
+    if getattr(spark, "_jvm", None) is None:
+        for p, df in zip(_vocab_paths(path), frames):
+            commit(spark, p, df.write.mode("overwrite").parquet)
+    else:
+        def write(staging: str) -> None:
+            for p, df in zip(_vocab_paths(staging), frames):
+                df.write.parquet(p)
 
-    commit(spark, path, write)
+        commit(spark, path, write)
     return stats_row.first().asDict()
 
 
@@ -385,6 +389,9 @@ def retrain_bpe_vocab(
     ``n_merges`` defaults to the live vocab's merge count. Returns the
     new stats dict plus ``swapped``, the tables the committed root
     holds."""
+    from spark_pipeline_spark.io.commit import require_jvm
+
+    require_jvm(spark, "retrain_bpe_vocab")
     if n_merges is None:
         n_merges = int(bpe_vocab_stats(spark, path)["n_merges"])
     info = build_bpe_vocab(

@@ -28,6 +28,7 @@ from spark_pipeline_spark.gate import local_frame
 from spark_pipeline_spark.io.commit import (
     commit,
     delete_path,
+    heal,
     open_table,
     require_jvm,
 )
@@ -81,17 +82,17 @@ def _replay_guarded_swap(spark, target_path: str, batch_id: int, merge_fn) -> No
 
     The merged result is written once and renamed into place by
     :func:`~spark_pipeline_spark.io.commit.commit` (distributed, never
-    through the driver). Opening the snapshot through
-    :func:`~spark_pipeline_spark.io.commit.open_table` finishes a commit
-    a crash interrupted, so the guard reads the newest committed
-    snapshot; crashed-overwrite debris that nothing can restore raises
-    instead of restarting as first-batch, which would overwrite
-    whatever a human could still salvage.
+    through the driver). :func:`~spark_pipeline_spark.io.commit.heal`
+    first finishes a commit a crash interrupted, so the guard reads the
+    newest committed snapshot; crashed-overwrite debris that nothing can
+    restore raises instead of restarting as first-batch, which would
+    overwrite whatever a human could still salvage.
 
     Legacy snapshots written before this column existed merge with
     ``last = -1`` (at-least-once, the old behavior), documented over
     failing.
     """
+    heal(spark, target_path)
     current = open_table(spark, target_path)
     last = -1
     if current is not None and SNAPSHOT_BATCH_COL in current.columns:
@@ -673,6 +674,7 @@ def stream_dedup_lsh_sink(
     spark = stream.sparkSession
     bands_path = index_path.rstrip("/") + "/bands"
     shingles_path = index_path.rstrip("/") + "/shingles"
+    index_tables = (bands_path, shingles_path)
 
     # builder parameters ride the persisted index as column metadata
     # (parquet keeps it), so dedup.minhash_incremental_pairs can refuse
@@ -774,6 +776,8 @@ def stream_dedup_lsh_sink(
         return drops, write_index
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        for path in index_tables:
+            heal(spark, path)  # this sink is the index's writer
         _accept_reject_batch(
             batch_df, batch_id, id_col, accepted_path, prepare, on_batch
         )
@@ -832,6 +836,7 @@ def stream_semantic_dedup_sink(
 
     spark = stream.sparkSession
     vectors_path = index_path.rstrip("/") + "/vectors"
+    index_tables = (vectors_path,)
 
     def prepare(pin, batch_df: DataFrame, batch_id: int):
         assigned = pin(
@@ -925,6 +930,8 @@ def stream_semantic_dedup_sink(
         return drops, write_index
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        for path in index_tables:
+            heal(spark, path)  # this sink is the index's writer
         _accept_reject_batch(
             batch_df, batch_id, id_col, accepted_path, prepare, on_batch
         )
@@ -1227,6 +1234,7 @@ def stream_ann_refresh_sink(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         root = index_path.rstrip("/")
+        heal(spark, root)  # before stream_base lands under the root
         if open_table(spark, root + "/centroids") is None:
             raise RuntimeError(
                 "stream_ann_refresh_sink: no index at "
@@ -1348,6 +1356,7 @@ def expire_index_batches(
     out: dict = {}
     for name in sub_dirs:
         path = f"{root}/{name}"
+        heal(spark, path)
         df = open_table(spark, path)
         if df is None:
             out[name] = []
@@ -1407,6 +1416,7 @@ def compact_index_batches(
     out: dict = {}
     for name in sub_dirs:
         path = f"{root}/{name}"
+        heal(spark, path)
         df = open_table(spark, path)
         if df is None:
             out[name] = []

@@ -1,7 +1,8 @@
 """The write-once, rename-commit primitive (spark_pipeline_spark/io/commit.py)
 and the kill-point matrix: every persisted artifact, killed at every step
-of its commit, reopens holding exactly its old or its new content, and
-leaves no sidecar behind."""
+of its commit, reads back as exactly its old or its new content without
+the read changing any file, and its next writer leaves no sidecar
+behind."""
 
 from __future__ import annotations
 
@@ -13,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_pipeline_spark.io import commit as commit_mod
-from spark_pipeline_spark.io.commit import commit, open_table, sidecars
+from spark_pipeline_spark.io.commit import commit, heal, open_table, sidecars
 from tests.commit_kill import CommitKilled, kill_commit, sidecar_residue
 from tests.conftest import SF_SMALL
 
@@ -31,6 +32,15 @@ def _rows(df, *cols) -> frozenset | None:
 
 def _tables(spark, root: str, names: tuple[str, ...]) -> dict:
     return {n: _rows(open_table(spark, f"{root}/{n}")) for n in names}
+
+
+def _tree(root) -> dict:
+    """Every file under ``root`` with its size: what a read must not change."""
+    return {
+        os.path.relpath(os.path.join(d, f), str(root)): os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(str(root))
+        for f in files
+    }
 
 
 # --------------------------------------------------------------------------
@@ -273,10 +283,11 @@ ARTIFACTS = {
 @pytest.mark.parametrize("step", [1, 2, 3])
 @pytest.mark.parametrize("name", sorted(ARTIFACTS))
 def test_kill_point_matrix(spark, tmp_path, monkeypatch, name, step):
-    """Kill the artifact's commit at ``step``, reopen it, then retry the
-    operation: the reopened artifact holds exactly the old content
-    (step 1) or the new content (steps 2 and 3) — per committed table,
-    never torn or empty — and no sidecar survives either open."""
+    """Kill the artifact's commit at ``step``, read it, then retry the
+    operation: the read sees exactly the old content (step 1) or the new
+    content (steps 2 and 3) — per committed table, never torn or empty —
+    and changes no file; the retried operation, a writer, heals the
+    crash and leaves no sidecar."""
     art = ARTIFACTS[name]
     root = str(tmp_path / "artifact")
     art.setup(spark, root)
@@ -285,10 +296,12 @@ def test_kill_point_matrix(spark, tmp_path, monkeypatch, name, step):
 
     with kill_commit(monkeypatch, step), pytest.raises(CommitKilled):
         art.run(spark, root)
+    crashed = _tree(tmp_path)
+    assert sidecar_residue(tmp_path)  # the crash left its sidecars
     got = art.content(spark, root)
-    assert sidecar_residue(tmp_path) == []
+    assert _tree(tmp_path) == crashed  # reading changes nothing
 
-    art.run(spark, root)  # the retried operation completes
+    art.run(spark, root)  # the retried operation heals, then completes
     new = art.content(spark, root)
     assert sidecar_residue(tmp_path) == []
     assert (new != old) == art.changes
@@ -377,9 +390,9 @@ def test_commit_false_rename_rolls_back(spark, tmp_path, monkeypatch):
 
 
 def test_commit_counts_a_concurrent_heal_as_success(spark, tmp_path, monkeypatch):
-    """A reader that opens the path between the two renames promotes the
-    staged copy itself; the writer's staging -> live rename then fails,
-    and the commit accepts it because live holds its staged copy."""
+    """A heal that runs between the two renames promotes the staged copy
+    itself; the writer's staging -> live rename then fails, and the
+    commit accepts it because live holds its staged copy."""
     live = str(tmp_path / "t")
     spark.range(3).write.parquet(live)
     real = commit_mod._rename
@@ -387,7 +400,8 @@ def test_commit_counts_a_concurrent_heal_as_success(spark, tmp_path, monkeypatch
     def rename(fs, src, dst):
         if src.endswith("__staging"):
             monkeypatch.setattr(commit_mod, "_rename", real)
-            assert open_table(spark, live).count() == 5  # the concurrent open
+            assert heal(spark, live) is True  # the interleaved heal
+            assert open_table(spark, live).count() == 5
             return False
         return real(fs, src, dst)
 
@@ -397,7 +411,9 @@ def test_commit_counts_a_concurrent_heal_as_success(spark, tmp_path, monkeypatch
     assert sidecar_residue(tmp_path) == []
 
 
-def test_open_table_heals_from_old_when_staging_is_lost(spark, tmp_path, monkeypatch):
+def test_heal_restores_old_when_staging_is_lost(spark, tmp_path, monkeypatch):
+    """Live moved aside and no complete staging copy: a read serves the
+    old copy where it lies, and a writer's heal moves it back."""
     live = str(tmp_path / "t")
     spark.range(3).write.parquet(live)
     with kill_commit(monkeypatch, 2), pytest.raises(CommitKilled):
@@ -406,6 +422,63 @@ def test_open_table_heals_from_old_when_staging_is_lost(spark, tmp_path, monkeyp
     commit_mod.delete_path(spark, staging)
     assert not os.path.exists(live) and os.path.exists(old)
     assert open_table(spark, live).count() == 3
+    assert not os.path.exists(live) and os.path.exists(old)
+    assert heal(spark, live) is True
+    assert heal(spark, live) is False
+    assert open_table(spark, live).count() == 3
+    assert sidecar_residue(tmp_path) == []
+
+
+def test_reads_during_a_commit_change_nothing(spark, tmp_path, monkeypatch):
+    """Reads interleaved with every step of a live commit: after the
+    staging copy is marked complete (live still committed), between the
+    two renames, and before the old copy is deleted. Each read sees the
+    old or the new rows and moves or deletes nothing, so the commit
+    completes and no copy is lost."""
+    live = str(tmp_path / "t")
+    spark.range(3).write.parquet(live)
+    real = commit_mod._rename
+    seen = []
+
+    def read():
+        before = _tree(tmp_path)
+        seen.append(open_table(spark, live).count())
+        assert _tree(tmp_path) == before
+
+    def rename(fs, src, dst):
+        read()
+        ok = real(fs, src, dst)
+        read()
+        return ok
+
+    monkeypatch.setattr(commit_mod, "_rename", rename)
+    commit(spark, live, spark.range(5).write.parquet)
+    monkeypatch.undo()
+    assert seen == [3, 5, 5, 5]
+    assert open_table(spark, live).count() == 5
+    assert sidecar_residue(tmp_path) == []
+
+
+def test_partition_commit_killed_mid_swap_reads_whole_table(spark, tmp_path, monkeypatch):
+    """A commit of one partition directory killed after live -> old: the
+    table read still holds that partition's rows (from the complete
+    staging copy, typed like the live partition column), and the read
+    changes nothing until a writer heals it."""
+    table = str(tmp_path / "t")
+    spark.range(6).select("id", (F.col("id") % 3).cast("int").alias("batch")).write.partitionBy(
+        "batch"
+    ).parquet(table)
+    with kill_commit(monkeypatch, 2), pytest.raises(CommitKilled):
+        commit(spark, f"{table}/batch=1", spark.range(10, 13).write.parquet)
+    assert not os.path.exists(f"{table}/batch=1")
+    crashed = _tree(tmp_path)
+    df = open_table(spark, table)
+    assert _tree(tmp_path) == crashed
+    assert df.dtypes == [("id", "bigint"), ("batch", "int")]
+    rows = sorted(tuple(r) for r in df.collect())
+    assert rows == [(0, 0), (2, 2), (3, 0), (5, 2), (10, 1), (11, 1), (12, 1)]
+    assert heal(spark, table) is True
+    assert sorted(tuple(r) for r in open_table(spark, table).collect()) == rows
     assert sidecar_residue(tmp_path) == []
 
 
