@@ -135,10 +135,18 @@ def main_mover(argv: list[str] | None = None) -> int:
 
 def main_scorer(argv: list[str] | None = None) -> int:
     """Distributed batch inference (``scorer.py:12-65``): load → key
-    hygiene → pandify → score via mapInPandas → audit columns → sink."""
+    hygiene → pandify → score → audit columns → sink.
+
+    ``score`` runs a linear-family model as one Catalyst projection and
+    any other model in Arrow ``mapInPandas``; a NaN prediction is written
+    as null on both paths. The printed row count rides the write through
+    an ``Observation`` (as in ``main_mover``): one job, nothing cached."""
     conf, _ = _parse_args(argv, "scorer")
     t0 = time.time()
     spark = _session(conf, "scorer")
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from spark_pipeline_spark.io.sinks import save
     from spark_pipeline_spark.io.sources import load
     from spark_pipeline_spark.operators.columns import (
@@ -161,9 +169,9 @@ def main_scorer(argv: list[str] | None = None) -> int:
         broadcast_model=bool(mconf.get("broadcast-model", False)),
     )
     scored = with_audit_columns(scored, model_name=mconf.get("name", "model"))
-    scored = scored.cache()
-    print(f"scored rows: {scored.count()}")
-    save(scored, conf["target"])
+    obs = Observation("scorer")
+    save(scored.observe(obs, F.count(F.lit(1)).alias("n_rows")), conf["target"])
+    print(f"scored rows: {obs.get['n_rows']}")
     print(f"execution time: {time.time() - t0:.1f}s")
     return 0
 

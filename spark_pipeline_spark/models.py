@@ -4,12 +4,40 @@ The engine scores any *duck-typed* sklearn-style object (SURVEY.md §2.10
 U3 dispatch): ``predict_proba`` → classifier, ``predict`` → regressor,
 plain callable → generic. sklearn itself is optional — these numpy-only
 models exercise every dispatch branch deterministically.
+
+The four linear-family models below also state their prediction as Spark
+Columns (``spark_columns``), next to the numpy formula it must match, so
+``operators.scoring.score`` can run them as one Catalyst projection. Its
+argument ``x`` maps a feature name to that feature as a double Column
+(the counterpart of ``x[c].to_numpy(dtype="float64")``). Every formula
+evaluates in numpy's order and uses typed double literals (a bare ``0.1``
+in Spark SQL is a DECIMAL).
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+Feature = Callable[[str], Column]
+
+# A left-deep chain of a few hundred additions overflows the JVM stack when
+# Spark converts the Column; longer sums run the same left fold as one
+# `aggregate` over an array, which whole-stage codegen does not compile.
+_CHAIN_TERMS = 64
+
+
+def _left_sum(first: Column, rest: list[Column]) -> Column:
+    """``first + rest[0] + rest[1] + ...``, added left to right as numpy does."""
+    if len(rest) > _CHAIN_TERMS:
+        return F.aggregate(F.array(*rest), first, lambda acc, t: acc + t)
+    for t in rest:
+        first = first + t
+    return first
 
 
 def simple_model(x: pd.DataFrame) -> pd.Series:
@@ -34,6 +62,11 @@ class LinearModel:
             out += w * x[c].to_numpy(dtype="float64")
         return out
 
+    def spark_columns(self, x: Feature) -> list[Column]:
+        """``[pred]``: intercept first, then the features in ``coef`` order."""
+        terms = [F.lit(float(w)) * x(c) for c, w in self.coef.items()]
+        return [_left_sum(F.lit(self.intercept), terms)]
+
 
 class LogisticModel:
     """Deterministic binary classifier: sigmoid of a linear score."""
@@ -49,6 +82,12 @@ class LogisticModel:
 
     def predict(self, x: pd.DataFrame) -> np.ndarray:
         return (self.predict_proba(x)[:, 1] >= 0.5).astype("int64")
+
+    def spark_columns(self, x: Feature) -> list[Column]:
+        """``predict_proba`` as ``[1 - p1, p1]`` (``classes_`` order)."""
+        (z,) = self.linear.spark_columns(x)
+        p1 = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+        return [F.lit(1.0) - p1, p1]
 
 
 class OLSModel:
@@ -85,6 +124,14 @@ class OLSModel:
         xm = x[self.feature_cols].to_numpy(dtype="float64")
         return xm @ self.coef_ + self.intercept_
 
+    def spark_columns(self, x: Feature) -> list[Column]:
+        """``[pred]``: the dot product in ``feature_cols`` order, then the
+        intercept. Raises when unfitted, as ``predict`` does."""
+        if self.coef_ is None:
+            raise RuntimeError("OLSModel is not fitted")
+        terms = [x(c) * F.lit(float(w)) for c, w in zip(self.feature_cols, self.coef_)]
+        return [_left_sum(terms[0], terms[1:]) + F.lit(self.intercept_)]
+
 
 def new_ols() -> "OLSModel":
     """Model factory for the trainer CLI (``model-definition.factory =
@@ -106,3 +153,14 @@ class MulticlassModel:
         scores -= scores.max(axis=1, keepdims=True)
         e = np.exp(scores)
         return e / e.sum(axis=1, keepdims=True)
+
+    def spark_columns(self, x: Feature) -> list[Column]:
+        """``predict_proba`` as one softmax Column per class, in
+        ``class_names`` order. A null or NaN score nulls the whole row,
+        as the NaN does in numpy: ``greatest`` skips nulls, but the
+        denominator sums every class."""
+        scores = [self.models[k].spark_columns(x)[0] for k in self.class_names]
+        top = F.greatest(*scores) if len(scores) > 1 else scores[0]
+        e = [F.exp(s - top) for s in scores]
+        total = _left_sum(e[0], e[1:])
+        return [v / total for v in e]

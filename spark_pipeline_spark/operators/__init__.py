@@ -6,7 +6,8 @@ Each module maps to a SURVEY.md §2 operator family:
 - ``sampling``  — limits, hash sampling, stratified quotas, grouped top-k,
   weighted / token-budget / training-mix sampling (§2.7)
 - ``packing``   — distributed prefix sums, fixed-token sequence packing
-- ``scoring``   — distributed model inference via mapInPandas (§2.10)
+- ``scoring``   — distributed model inference: one Catalyst projection for
+  linear-family models, mapInPandas for the rest (§2.10)
 - ``training``  — collect-fit-persist trainer verb (§3.3)
 - ``datadiff``  — one-pass drift histograms + TVD/PSI distances (§2.5)
 - ``setops``    — union/intersect/except, set and bag variants (§2.8)

@@ -9,22 +9,63 @@ Python model to a big DataFrame. The reference ships two paths —
 - ``score_udf``: ``mapInPandas`` with an explicit DDL schema
   (``sparktools/core.py:30-44``) — the modern form.
 
-This engine keeps ONLY the Arrow path. Batching is Arrow's
-(``spark.sql.execution.arrow.maxRecordsPerBatch`` supersedes
-``block_iterator``, ``core.py:76-84``); the output schema is explicit, so
-nothing is inferred; the model rides to executors inside the serialized
-closure of the UDF (broadcast join of reference ``core.py:93-97``
-semantics — use ``spark.sparkContext.broadcast`` explicitly for very large
-models via ``broadcast_model=True``).
+This engine has one ``score`` with two paths, chosen per model:
+
+- **Catalyst projection** for a model that states its prediction as Spark
+  Columns (``spark_columns``, the linear family in ``models.py``): one
+  ``select`` under whole-stage codegen, no Python worker, no Arrow
+  round-trip (the GLM-as-native-arithmetic view of MLlib*, PAPERS.md).
+- **Arrow** ``mapInPandas`` for every opaque model (sklearn pickles, plain
+  callables). Batching is Arrow's
+  (``spark.sql.execution.arrow.maxRecordsPerBatch`` supersedes
+  ``block_iterator``, ``core.py:76-84``); the model rides to executors
+  inside the serialized closure of the UDF (broadcast join of reference
+  ``core.py:93-97`` semantics — use ``spark.sparkContext.broadcast``
+  explicitly for very large models via ``broadcast_model=True``).
+
+Both paths produce the same column names and types, so nothing is
+inferred, and the same values: a prediction that is NaN (a null or NaN
+feature) comes out null, because Arrow turns pandas NaN into null; ``inf``
+passes through.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DataType,
+    DoubleType,
+    FloatType,
+    NumericType,
+)
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _named_outputs(
+    mdl: Any, outputs: Sequence, target_class_names: list[str] | None
+) -> list[tuple[str, Any]]:
+    """Name a model's outputs (``sparktools/core.py:57-69``), for both paths.
+
+    Classifier (has ``predict_proba``; ``outputs`` are the per-class
+    columns): ≤2 classes → the positive (last) class as ``target_proba``;
+    ≥3 classes → one column per class name (auto ``class{i}`` when names
+    are absent). Regressor or callable → ``pred``.
+    """
+    if not hasattr(mdl, "predict_proba"):
+        return [("pred", outputs[0])]
+    if len(outputs) <= 2:
+        return [("target_proba", outputs[-1])]
+    names = target_class_names or [f"class{i}" for i in range(len(outputs))]
+    return list(zip(names, outputs))
 
 
 def predict(
@@ -35,46 +76,31 @@ def predict(
 ) -> pd.DataFrame:
     """The pandas scoring kernel — duck-typed model dispatch.
 
-    Parity with ``sparktools/core.py:47-73``:
-
-    - classifier (has ``predict_proba``): binary → positive-class column
-      ``target_proba``; ≥3 classes → one float column per class name
-      (auto ``class{i}`` when names absent);
-    - regressor (has ``predict``): → ``pred``;
-    - plain callable: ``mdl(features_df)`` → ``pred``;
-    - passthrough of ``cols_to_save ∩ columns``.
+    Parity with ``sparktools/core.py:47-73``: ``predict_proba`` →
+    classifier, ``predict`` → regressor, plain callable →
+    ``mdl(features_df)``; outputs named by ``_named_outputs``, after the
+    passthrough of ``cols_to_save ∩ columns``.
     """
     saved = [c for c in (cols_to_save or []) if c in features_df.columns]
     out = features_df[saved].copy() if saved else pd.DataFrame(index=features_df.index)
 
     if hasattr(mdl, "predict_proba"):
-        proba = mdl.predict_proba(features_df)
-        n_classes = proba.shape[1]
-        if n_classes <= 2:
-            out["target_proba"] = proba[:, -1].astype("float64")
-        else:
-            names = target_class_names or [f"class{i}" for i in range(n_classes)]
-            for i, name in enumerate(names):
-                out[name] = proba[:, i].astype("float64")
+        outputs = list(mdl.predict_proba(features_df).T)
     elif hasattr(mdl, "predict"):
-        out["pred"] = pd.Series(mdl.predict(features_df), index=features_df.index).astype(
-            "float64"
-        )
+        outputs = [mdl.predict(features_df)]
     elif callable(mdl):
-        out["pred"] = pd.Series(mdl(features_df), index=features_df.index).astype("float64")
+        outputs = [mdl(features_df)]
     else:
         raise TypeError(f"model {type(mdl)!r} has no predict_proba/predict and is not callable")
+    for name, values in _named_outputs(mdl, outputs, target_class_names):
+        out[name] = pd.Series(values, index=features_df.index).astype("float64")
     return out
 
 
-def _output_schema(
-    df: DataFrame,
-    mdl: Any,
-    target_class_names: list[str] | None,
-    cols_to_save: list[str] | None,
-) -> str:
-    """Explicit output DDL (``sparktools/core.py:31-36`` approach) — nothing
-    schema-inferred, so floats stay floats and nulls stay typed.
+def _output_names(mdl: Any, target_class_names: list[str] | None) -> list[str]:
+    """The declared prediction columns (``sparktools/core.py:31-36``
+    approach) — nothing schema-inferred, so floats stay floats and nulls
+    stay typed.
 
     The class count is never guessed: a ``predict_proba`` model must carry
     ``classes_`` or the caller must pass ``target_class_names`` — otherwise
@@ -83,27 +109,45 @@ def _output_schema(
     (SURVEY.md §2.13.9 — the schema-inference class of bug this engine
     rejects).
     """
-    saved = [c for c in (cols_to_save or []) if c in df.columns]
-    parts = [f"`{name}` {dtype}" for name, dtype in df.select(*saved).dtypes] if saved else []
+    n_outputs = 1
     if hasattr(mdl, "predict_proba"):
         if target_class_names is not None:
-            n_classes = len(target_class_names)
+            n_outputs = len(target_class_names)
         elif hasattr(mdl, "classes_"):
-            n_classes = len(mdl.classes_)
+            n_outputs = len(mdl.classes_)
         else:
             raise ValueError(
                 "model has predict_proba but no classes_ attribute; pass "
                 "target_class_names so the output schema is explicit "
                 "(binary models: pass ['neg','pos'] or expose classes_)"
             )
-        if n_classes <= 2:
-            parts.append("target_proba double")
-        else:
-            names = target_class_names or [f"class{i}" for i in range(n_classes)]
-            parts.extend(f"`{n}` double" for n in names)
-    else:
-        parts.append("pred double")
-    return ", ".join(parts)
+    return [name for name, _ in _named_outputs(mdl, range(n_outputs), target_class_names)]
+
+
+def _nan_to_null(col: Column, dtype: DataType) -> Column:
+    """What Arrow does to a pandas float column on its way back: NaN → null."""
+    if isinstance(dtype, (DoubleType, FloatType)):
+        return F.nanvl(col, F.lit(None).cast(dtype))
+    return col
+
+
+def _spark_outputs(types: dict[str, DataType], mdl: Any) -> list[Column] | None:
+    """The model's outputs as Spark Columns over input columns ``types``,
+    or None when the model has no ``spark_columns`` or references a
+    feature that is not a numeric or boolean input column (those take the
+    Arrow path, which reads them the way pandas does)."""
+    to_columns = getattr(mdl, "spark_columns", None)
+    if to_columns is None:
+        return None
+    opaque: list[str] = []
+
+    def feature(name: str) -> Column:
+        if not isinstance(types.get(name), (NumericType, BooleanType)):
+            opaque.append(name)
+        return F.col(_quote(name)).cast("double")
+
+    outputs = to_columns(feature)
+    return None if opaque else outputs
 
 
 def score(
@@ -122,12 +166,43 @@ def score(
     columns out of 500 is the difference between reading 1 TB and 100 TB
     (column pruning reaches the parquet scan because this stays a
     DataFrame plan).
+
+    A model with ``spark_columns`` whose features are all numeric or
+    boolean columns of ``df`` is lowered to one ``select`` of
+    ``cols_to_save`` plus its predictions, every double or float column
+    wrapped in ``nanvl(x, NULL)`` so NaN reads as null, exactly as on the
+    Arrow path; ``broadcast_model`` is a no-op for it (nothing is shipped).
+    A lowered classifier whose classes do not produce the columns
+    ``target_class_names`` declares raises ``ValueError``. Every other
+    model runs in ``mapInPandas``. Either way the output columns are
+    ``cols_to_save ∩ columns`` followed by ``target_proba`` (binary), one
+    column per class (≥3 classes) or ``pred`` (regressor), all double.
     """
     if feature_cols:
         keep = list(dict.fromkeys((cols_to_save or []) + feature_cols))
         df = df.select(*[c for c in keep if c in df.columns])
 
-    schema = _output_schema(df, mdl, target_class_names, cols_to_save)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    saved = [c for c in (cols_to_save or []) if c in types]
+    names = _output_names(mdl, target_class_names)
+
+    lowered = _spark_outputs(types, mdl)
+    if lowered is not None:
+        named = _named_outputs(mdl, lowered, target_class_names)
+        if [n for n, _ in named] != names:
+            raise ValueError(
+                f"model scores {len(lowered)} classes but target_class_names "
+                f"declares the outputs {names}"
+            )
+        return df.select(
+            *[_nan_to_null(F.col(_quote(c)), types[c]).alias(c) for c in saved],
+            *[_nan_to_null(c, DoubleType()).alias(n) for n, c in named],
+        )
+
+    schema = ", ".join(
+        [f"{_quote(c)} {types[c].simpleString()}" for c in saved]
+        + [f"{_quote(n)} double" for n in names]
+    )
 
     if broadcast_model:
         bc = df.sparkSession.sparkContext.broadcast(mdl)
@@ -140,12 +215,11 @@ def score(
         def get_model() -> Any:
             return mdl
 
-    saved, names = cols_to_save, target_class_names
-
     def apply_model(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = get_model()
         for batch in batches:
-            yield predict(batch, model, target_class_names=names, cols_to_save=saved)
+            yield predict(batch, model, target_class_names=target_class_names,
+                          cols_to_save=saved)
 
     return df.mapInPandas(apply_model, schema=schema)
 

@@ -15,8 +15,9 @@ Scale posture: training is the ONE deliberately driver-side verb — the
 training set must fit in driver memory by contract (the reference's
 design, kept). What stays distributed is everything around it: feature
 construction and sampling run as Spark plans before the collect, and the
-fitted model goes back out through `operators/scoring.score`
-(mapInPandas) for distributed inference. ``max_rows`` guards against
+fitted model goes back out through `operators/scoring.score` for
+distributed inference (a Catalyst projection for the linear-family models,
+mapInPandas for the rest). ``max_rows`` guards against
 accidentally collecting a 100 TB table.
 """
 

@@ -2766,7 +2766,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Model scoring via mapInPandas (SURVEY.md §2.10)
+# Model scoring: Catalyst projection or mapInPandas (SURVEY.md §2.10)
 # ---------------------------------------------------------------------------
 
 
@@ -2786,9 +2786,10 @@ def score_callable_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed inference of a callable model (simple_model parity:
     sparktools/simple_model.py + core.py:30-44) over Arrow batches.
 
-    The model computes f1*f2 on executors via mapInPandas; the oracle
-    states the same arithmetic in SQL — verifying the whole
-    schema/batch/dispatch plumbing end-to-end.
+    The model computes f1*f2 on executors via mapInPandas (an opaque
+    callable cannot be lowered to Spark Columns); the oracle states the
+    same arithmetic in SQL — verifying the whole schema/batch/dispatch
+    plumbing of the Arrow path end-to-end.
     """
     from spark_pipeline_spark.models import simple_model
     from spark_pipeline_spark.operators.columns import require_key
@@ -2825,8 +2826,9 @@ def score_callable_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 def train_ols_score_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trainer verb end-to-end (sparktools/trainer.py:29-65 parity):
     collect the training frame to the driver (Arrow), fit a closed-form
-    OLS regressor, then score DISTRIBUTED via mapInPandas (regressor
-    dispatch branch). The fitted slope/intercept equal ANSI
+    OLS regressor, then score DISTRIBUTED (regressor dispatch branch) as
+    one Catalyst projection of the fitted coefficients — no Python
+    worker. The fitted slope/intercept equal ANSI
     regr_slope/regr_intercept, so the whole train→score loop is
     oracle-verifiable in SQL."""
     from spark_pipeline_spark.models import OLSModel
@@ -2869,7 +2871,8 @@ def train_ols_score_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def score_regressor_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regressor dispatch branch (predict → pred, sparktools/core.py:68-69)
-    with a fixed-coefficient linear model."""
+    with a fixed-coefficient linear model, scored as one Catalyst
+    projection (``LinearModel.spark_columns``)."""
     from spark_pipeline_spark.models import LinearModel
     from spark_pipeline_spark.operators.columns import require_key
     from spark_pipeline_spark.operators.scoring import score
@@ -2912,7 +2915,8 @@ def score_regressor_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 def score_multiclass_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiclass dispatch branch (≥3 classes → one probability column per
     class name, sparktools/core.py:63-67) with a deterministic softmax
-    model; class names supplied explicitly — the schema is never guessed."""
+    model, scored as one Catalyst projection (max-shifted softmax, as in
+    numpy); class names supplied explicitly — the schema is never guessed."""
     from spark_pipeline_spark.models import MulticlassModel
     from spark_pipeline_spark.operators.columns import require_key
     from spark_pipeline_spark.operators.scoring import score
@@ -2953,10 +2957,12 @@ def score_multiclass_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def score_logistic_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-classifier dispatch branch (predict_proba → target_proba,
-    sparktools/core.py:57-61) with a deterministic numpy logistic model.
-    Exercises ``broadcast_model=True`` — the model ships to executors via
+    sparktools/core.py:57-61) with a deterministic logistic model, scored
+    as one Catalyst projection (``LogisticModel.spark_columns``). Passes
+    ``broadcast_model=True``, which ships an opaque model to executors via
     a Spark broadcast (sparktools/core.py:93-95 parity) instead of the
-    task closure, which is how multi-GB sklearn payloads must travel."""
+    task closure; for a lowered model nothing is shipped, so it is a
+    no-op here."""
     from spark_pipeline_spark.models import LogisticModel
     from spark_pipeline_spark.operators.columns import require_key
     from spark_pipeline_spark.operators.scoring import score

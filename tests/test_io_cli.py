@@ -182,6 +182,36 @@ def test_scorer_cli_end_to_end(spark, tmp_path):
     assert ((probs >= 0) & (probs <= 1)).all()
 
 
+def test_scorer_cli_counts_rows_without_caching(spark, tmp_path, capsys):
+    """``scored rows: N`` is the input row count, observed on the write
+    itself: the scorer leaves no cached data behind."""
+    from spark_pipeline_spark.cli import main_scorer
+    from spark_pipeline_spark.models import LinearModel
+    from spark_pipeline_spark.operators.training import save_model
+
+    model_path = str(tmp_path / "linear.bin")
+    save_model(LinearModel({"o_totalprice": 0.5}, intercept=1.0), model_path)
+    conf = _write_conf(
+        tmp_path,
+        "score_count.json",
+        {
+            "source": {
+                "storage": "file",
+                "path": f"{SF_SMALL}/orders.parquet",
+                "transform-sql": "SELECT o_orderkey AS uid, o_totalprice FROM dataset_temp",
+            },
+            "model": {"path": model_path, "cols-to-save": ["uid"]},
+            "target": {"storage": "file", "path": str(tmp_path / "scored")},
+        },
+    )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert main_scorer(["--conf", conf]) == 0
+    n_src = read_file(spark, f"{SF_SMALL}/orders.parquet").count()
+    assert f"scored rows: {n_src}" in capsys.readouterr().out
+    assert read_file(spark, str(tmp_path / "scored")).count() == n_src
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
 def test_trainer_cli_end_to_end(spark, tmp_path):
     from spark_pipeline_spark.cli import main_trainer
     from spark_pipeline_spark.operators.training import load_model

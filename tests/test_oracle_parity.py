@@ -60,7 +60,8 @@ PARITY_SMOKE = [
     "merge_cdc_tombstones_orders",    # merge/CDC
     "stratified_fraction_documents",  # sampling
     "datadiff_hash_histogram_orders",  # datadiff/sketches
-    "score_logistic_model",           # scoring (Arrow boundary)
+    "score_logistic_model",           # scoring (Catalyst projection)
+    "score_callable_model",           # scoring (Arrow boundary)
     "ewma_user_value",                # event windows
 ]
 

@@ -152,6 +152,49 @@ def test_scoring_projects_features_before_python(spark):
         assert unused not in read_schema
 
 
+_PYTHON_NODES = {"MapInPandas", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython"}
+
+
+def _plan_node_names(df):
+    def walk(node):
+        yield node.nodeName()
+        for c in _plan_kids(node):
+            yield from walk(c)
+
+    return set(walk(df._jdf.queryExecution().executedPlan()))
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "score_logistic_model",
+        "score_regressor_model",
+        "score_multiclass_model",
+        "train_ols_score_lineitem",
+    ],
+)
+def test_linear_models_score_without_python(spark, name):
+    """The linear-family models score as one Catalyst projection: no
+    Python worker, no Arrow round-trip anywhere in the executed plan."""
+    nodes = _plan_node_names(REGISTRY[name].fn(spark, SF_SMALL))
+    assert not nodes & _PYTHON_NODES, f"{name} plans {nodes & _PYTHON_NODES}"
+
+
+def test_opaque_models_keep_map_in_pandas(spark):
+    """A plain callable, or a linear model without ``spark_columns``,
+    still takes the Arrow mapInPandas path."""
+    from spark_pipeline_spark.models import LogisticModel
+    from spark_pipeline_spark.operators.scoring import score
+    from tests.test_scoring_lowered import opaque
+
+    assert "MapInPandas" in _plan_node_names(
+        REGISTRY["score_callable_model"].fn(spark, SF_SMALL)
+    )
+    c = t(spark, SF_SMALL, "customer").select("c_custkey", "c_acctbal")
+    mdl = opaque(LogisticModel({"c_acctbal": 0.001}, intercept=-2.0))
+    assert "MapInPandas" in _plan_node_names(score(c, mdl, cols_to_save=["c_custkey"]))
+
+
 def test_token_budget_sample_no_global_sort(spark):
     """The bucketed prefix plan must never fall back to a global
     running-sum window: no single-partition Sort/Window over the corpus

@@ -274,6 +274,37 @@ def test_stream_scoring_matches_batch(spark, tmp_path):
     assert a == b and len(a) == c.count()
 
 
+def test_stream_lowered_scoring_matches_python_path(spark, tmp_path):
+    """A lowered (Catalyst-projection) model over a streaming source must
+    equal the Arrow path over the same rows in batch, with null, NaN and
+    ±inf features in the input."""
+    from spark_pipeline_spark.models import MulticlassModel
+    from spark_pipeline_spark.operators.scoring import score
+    from spark_pipeline_spark.streaming import (
+        read_parquet_stream,
+        run_available_now_to_memory,
+    )
+    from tests.test_scoring_lowered import assert_same_scores, features_frame, opaque
+
+    df = features_frame(spark, seed=5)
+    src = str(tmp_path / "lowered_src")
+    df.write.mode("overwrite").parquet(src)
+    mdl = MulticlassModel({
+        "lo": {"a": -0.7, "n": 0.2},
+        "mid": {"b": 0.4, "flag": 1.5},
+        "hi": {"a": 0.9, "b": -0.3, "n": -0.1},
+    })
+    stream = read_parquet_stream(
+        spark, src, "uid string, a double, b double, n bigint, flag boolean"
+    )
+    streamed = run_available_now_to_memory(
+        score(stream, mdl, cols_to_save=["uid", "a"]),
+        "stream_lowered_score_test",
+        output_mode="append",
+    )
+    assert_same_scores(streamed, score(df, opaque(mdl), cols_to_save=["uid", "a"]))
+
+
 def test_committed_snapshot_exists_distinguishes_crash_debris(spark, tmp_path):
     """A bare directory (crashed overwrite debris) must read as 'no
     snapshot' so the upsert sink restarts as first-batch instead of
