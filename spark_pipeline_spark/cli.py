@@ -108,27 +108,23 @@ def main_mover(argv: list[str] | None = None) -> int:
 
     Unlike the reference — which writes, then ``count()``s the *source
     plan again* (a second full scan, ``mover.py:33-35``) — the row count
-    rides the write itself via the ``Observation`` API: metrics
-    accumulate inside the one write job, so ``log-count`` costs ZERO
-    extra scans, zero cache memory, and zero extra actions.
+    rides the write itself via the ``Observation`` API
+    (``io.sinks.save_counted``): metrics accumulate inside the one write
+    job, so ``log-count`` costs ZERO extra scans, zero cache memory, and
+    zero extra actions (a ``disabled`` or streaming ``csv`` target, which
+    runs no write action over the plan, counts with one ``count()``).
     """
     conf, _ = _parse_args(argv, "mover")
     t0 = time.time()
     spark = _session(conf, "mover")
-    from spark_pipeline_spark.io.sinks import save
+    from spark_pipeline_spark.io.sinks import save, save_counted
     from spark_pipeline_spark.io.sources import load
 
     df = load(spark, conf["source"])
-    obs = None
     if conf.get("log-count", False):
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        obs = Observation("mover")
-        df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    save(df, conf["target"])
-    if obs is not None:
-        print(f"moved rows: {obs.get['n_rows']}")
+        print(f"moved rows: {save_counted(df, conf['target'])}")
+    else:
+        save(df, conf["target"])
     print(f"execution time: {time.time() - t0:.1f}s")
     return 0
 
@@ -139,15 +135,12 @@ def main_scorer(argv: list[str] | None = None) -> int:
 
     ``score`` runs a linear-family model as one Catalyst projection and
     any other model in Arrow ``mapInPandas``; a NaN prediction is written
-    as null on both paths. The printed row count rides the write through
-    an ``Observation`` (as in ``main_mover``): one job, nothing cached."""
+    as null on both paths. The printed row count comes from
+    ``io.sinks.save_counted``: nothing is cached."""
     conf, _ = _parse_args(argv, "scorer")
     t0 = time.time()
     spark = _session(conf, "scorer")
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    from spark_pipeline_spark.io.sinks import save
+    from spark_pipeline_spark.io.sinks import save_counted
     from spark_pipeline_spark.io.sources import load
     from spark_pipeline_spark.operators.columns import (
         pandify,
@@ -169,9 +162,7 @@ def main_scorer(argv: list[str] | None = None) -> int:
         broadcast_model=bool(mconf.get("broadcast-model", False)),
     )
     scored = with_audit_columns(scored, model_name=mconf.get("name", "model"))
-    obs = Observation("scorer")
-    save(scored.observe(obs, F.count(F.lit(1)).alias("n_rows")), conf["target"])
-    print(f"scored rows: {obs.get['n_rows']}")
+    print(f"scored rows: {save_counted(scored, conf['target'])}")
     print(f"execution time: {time.time() - t0:.1f}s")
     return 0
 

@@ -215,3 +215,26 @@ def save(df: DataFrame, conf: Mapping[str, Any]) -> None:
         write_single_csv(df, conf["path"], sep=conf.get("sep", "\t"), streaming=True)
     else:
         raise ValueError(f"unknown storage type: {storage!r}")
+
+
+def save_counted(df: DataFrame, conf: Mapping[str, Any]) -> int:
+    """``save`` that also returns the number of rows in ``df``.
+
+    The count rides the write through an ``Observation``: it accumulates
+    inside the one write job, so it costs no extra scan, cache or action.
+    An ``Observation`` is only filled when an action runs the whole plan,
+    and its ``get`` blocks until then. A ``disabled`` target runs no
+    action, and the streaming ``csv`` sink pulls partitions through
+    ``toLocalIterator``, which never fills it; those two count with a
+    plain, uncached ``count()`` instead.
+    """
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    if conf.get("disabled", False) or conf.get("storage") == "csv":
+        n_rows = df.count()
+        save(df, conf)
+        return n_rows
+    obs = Observation()
+    save(df.observe(obs, F.count(F.lit(1)).alias("n_rows")), conf)
+    return obs.get["n_rows"]

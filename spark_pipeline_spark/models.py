@@ -25,16 +25,9 @@ from pyspark.sql import functions as F
 
 Feature = Callable[[str], Column]
 
-# A left-deep chain of a few hundred additions overflows the JVM stack when
-# Spark converts the Column; longer sums run the same left fold as one
-# `aggregate` over an array, which whole-stage codegen does not compile.
-_CHAIN_TERMS = 64
-
 
 def _left_sum(first: Column, rest: list[Column]) -> Column:
     """``first + rest[0] + rest[1] + ...``, added left to right as numpy does."""
-    if len(rest) > _CHAIN_TERMS:
-        return F.aggregate(F.array(*rest), first, lambda acc, t: acc + t)
     for t in rest:
         first = first + t
     return first

@@ -11,12 +11,13 @@ Python model to a big DataFrame. The reference ships two paths —
 
 This engine has one ``score`` with two paths, chosen per model:
 
-- **Catalyst projection** for a model that states its prediction as Spark
-  Columns (``spark_columns``, the linear family in ``models.py``): one
-  ``select`` under whole-stage codegen, no Python worker, no Arrow
-  round-trip (the GLM-as-native-arithmetic view of MLlib*, PAPERS.md).
-- **Arrow** ``mapInPandas`` for every opaque model (sklearn pickles, plain
-  callables). Batching is Arrow's
+- **Catalyst projection** for a model over at most 64 numeric or boolean
+  features that states its prediction as Spark Columns
+  (``spark_columns``, the linear family in ``models.py``): one ``select``
+  under whole-stage codegen, no Python worker, no Arrow round-trip (the
+  GLM-as-native-arithmetic view of MLlib*, PAPERS.md).
+- **Arrow** ``mapInPandas`` for every other model (sklearn pickles, plain
+  callables, wider linear models). Batching is Arrow's
   (``spark.sql.execution.arrow.maxRecordsPerBatch`` supersedes
   ``block_iterator``, ``core.py:76-84``); the model rides to executors
   inside the serialized closure of the UDF (broadcast join of reference
@@ -50,22 +51,27 @@ def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _named_outputs(
-    mdl: Any, outputs: Sequence, target_class_names: list[str] | None
-) -> list[tuple[str, Any]]:
-    """Name a model's outputs (``sparktools/core.py:57-69``), for both paths.
+def _output_names(
+    mdl: Any, n_outputs: int, target_class_names: list[str] | None
+) -> list[str]:
+    """Name a model's ``n_outputs`` outputs (``sparktools/core.py:57-69``),
+    for both paths.
 
-    Classifier (has ``predict_proba``; ``outputs`` are the per-class
-    columns): ≤2 classes → the positive (last) class as ``target_proba``;
-    ≥3 classes → one column per class name (auto ``class{i}`` when names
-    are absent). Regressor or callable → ``pred``.
+    Classifier (has ``predict_proba``; one output per class): ≤2 classes →
+    ``target_proba``; ≥3 classes → one column per class name (auto
+    ``class{i}`` when names are absent). Regressor or callable → ``pred``.
     """
     if not hasattr(mdl, "predict_proba"):
-        return [("pred", outputs[0])]
-    if len(outputs) <= 2:
-        return [("target_proba", outputs[-1])]
-    names = target_class_names or [f"class{i}" for i in range(len(outputs))]
-    return list(zip(names, outputs))
+        return ["pred"]
+    if n_outputs <= 2:
+        return ["target_proba"]
+    return list(target_class_names or [f"class{i}" for i in range(n_outputs)])
+
+
+def _named_outputs(names: list[str], outputs: Sequence) -> list[tuple[str, Any]]:
+    """Pair ``names`` with ``outputs``; a binary classifier keeps only its
+    positive (last) class."""
+    return list(zip(names, outputs[-1:] if len(outputs) <= 2 else outputs))
 
 
 def predict(
@@ -78,7 +84,7 @@ def predict(
 
     Parity with ``sparktools/core.py:47-73``: ``predict_proba`` →
     classifier, ``predict`` → regressor, plain callable →
-    ``mdl(features_df)``; outputs named by ``_named_outputs``, after the
+    ``mdl(features_df)``; outputs named by ``_output_names``, after the
     passthrough of ``cols_to_save ∩ columns``.
     """
     saved = [c for c in (cols_to_save or []) if c in features_df.columns]
@@ -92,13 +98,14 @@ def predict(
         outputs = [mdl(features_df)]
     else:
         raise TypeError(f"model {type(mdl)!r} has no predict_proba/predict and is not callable")
-    for name, values in _named_outputs(mdl, outputs, target_class_names):
+    names = _output_names(mdl, len(outputs), target_class_names)
+    for name, values in _named_outputs(names, outputs):
         out[name] = pd.Series(values, index=features_df.index).astype("float64")
     return out
 
 
-def _output_names(mdl: Any, target_class_names: list[str] | None) -> list[str]:
-    """The declared prediction columns (``sparktools/core.py:31-36``
+def _declared_outputs(mdl: Any, target_class_names: list[str] | None) -> int:
+    """How many outputs the model declares (``sparktools/core.py:31-36``
     approach) — nothing schema-inferred, so floats stay floats and nulls
     stay typed.
 
@@ -109,19 +116,17 @@ def _output_names(mdl: Any, target_class_names: list[str] | None) -> list[str]:
     (SURVEY.md §2.13.9 — the schema-inference class of bug this engine
     rejects).
     """
-    n_outputs = 1
-    if hasattr(mdl, "predict_proba"):
-        if target_class_names is not None:
-            n_outputs = len(target_class_names)
-        elif hasattr(mdl, "classes_"):
-            n_outputs = len(mdl.classes_)
-        else:
-            raise ValueError(
-                "model has predict_proba but no classes_ attribute; pass "
-                "target_class_names so the output schema is explicit "
-                "(binary models: pass ['neg','pos'] or expose classes_)"
-            )
-    return [name for name, _ in _named_outputs(mdl, range(n_outputs), target_class_names)]
+    if not hasattr(mdl, "predict_proba"):
+        return 1
+    if target_class_names is not None:
+        return len(target_class_names)
+    if hasattr(mdl, "classes_"):
+        return len(mdl.classes_)
+    raise ValueError(
+        "model has predict_proba but no classes_ attribute; pass "
+        "target_class_names so the output schema is explicit "
+        "(binary models: pass ['neg','pos'] or expose classes_)"
+    )
 
 
 def _nan_to_null(col: Column, dtype: DataType) -> Column:
@@ -131,23 +136,32 @@ def _nan_to_null(col: Column, dtype: DataType) -> Column:
     return col
 
 
+# The widest model that is lowered. Each feature adds one level to a
+# left-deep chain of additions, and a chain of a few hundred overflows the
+# JVM stack; wider models take the Arrow path.
+_MAX_LOWERED_FEATURES = 64
+
+
 def _spark_outputs(types: dict[str, DataType], mdl: Any) -> list[Column] | None:
     """The model's outputs as Spark Columns over input columns ``types``,
-    or None when the model has no ``spark_columns`` or references a
-    feature that is not a numeric or boolean input column (those take the
-    Arrow path, which reads them the way pandas does)."""
+    or None when the model has no ``spark_columns``, references more than
+    ``_MAX_LOWERED_FEATURES`` features, or references a feature that is
+    not a numeric or boolean input column (those take the Arrow path,
+    which reads them the way pandas does)."""
     to_columns = getattr(mdl, "spark_columns", None)
     if to_columns is None:
         return None
+    used: set[str] = set()
     opaque: list[str] = []
 
     def feature(name: str) -> Column:
+        used.add(name)
         if not isinstance(types.get(name), (NumericType, BooleanType)):
             opaque.append(name)
         return F.col(_quote(name)).cast("double")
 
     outputs = to_columns(feature)
-    return None if opaque else outputs
+    return None if opaque or len(used) > _MAX_LOWERED_FEATURES else outputs
 
 
 def score(
@@ -167,13 +181,13 @@ def score(
     (column pruning reaches the parquet scan because this stays a
     DataFrame plan).
 
-    A model with ``spark_columns`` whose features are all numeric or
-    boolean columns of ``df`` is lowered to one ``select`` of
+    A model with ``spark_columns`` over at most 64 features, all numeric
+    or boolean columns of ``df``, is lowered to one ``select`` of
     ``cols_to_save`` plus its predictions, every double or float column
     wrapped in ``nanvl(x, NULL)`` so NaN reads as null, exactly as on the
     Arrow path; ``broadcast_model`` is a no-op for it (nothing is shipped).
-    A lowered classifier whose classes do not produce the columns
-    ``target_class_names`` declares raises ``ValueError``. Every other
+    A lowered classifier that scores a different number of classes than
+    ``target_class_names`` names raises ``ValueError``. Every other
     model runs in ``mapInPandas``. Either way the output columns are
     ``cols_to_save ∩ columns`` followed by ``target_proba`` (binary), one
     column per class (≥3 classes) or ``pred`` (regressor), all double.
@@ -184,16 +198,17 @@ def score(
 
     types = {f.name: f.dataType for f in df.schema.fields}
     saved = [c for c in (cols_to_save or []) if c in types]
-    names = _output_names(mdl, target_class_names)
+    n_outputs = _declared_outputs(mdl, target_class_names)
+    names = _output_names(mdl, n_outputs, target_class_names)
 
     lowered = _spark_outputs(types, mdl)
     if lowered is not None:
-        named = _named_outputs(mdl, lowered, target_class_names)
-        if [n for n, _ in named] != names:
+        if len(lowered) != n_outputs:
             raise ValueError(
                 f"model scores {len(lowered)} classes but target_class_names "
-                f"declares the outputs {names}"
+                f"declares {n_outputs}: {target_class_names}"
             )
+        named = _named_outputs(names, lowered)
         return df.select(
             *[_nan_to_null(F.col(_quote(c)), types[c]).alias(c) for c in saved],
             *[_nan_to_null(c, DoubleType()).alias(n) for n, c in named],

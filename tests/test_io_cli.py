@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import threading
 
 import pandas as pd
 import pytest
@@ -182,15 +183,38 @@ def test_scorer_cli_end_to_end(spark, tmp_path):
     assert ((probs >= 0) & (probs <= 1)).all()
 
 
-def test_scorer_cli_counts_rows_without_caching(spark, tmp_path, capsys):
-    """``scored rows: N`` is the input row count, observed on the write
-    itself: the scorer leaves no cached data behind."""
+def _returns_within(seconds, fn, *args):
+    """``fn(*args)`` run on a daemon thread: a call that blocks for ever
+    fails the test instead of hanging the suite."""
+    result = []
+    worker = threading.Thread(target=lambda: result.append(fn(*args)), daemon=True)
+    worker.start()
+    worker.join(seconds)
+    assert result, f"{fn.__name__} did not return within {seconds}s"
+    return result[0]
+
+
+@pytest.mark.parametrize(
+    "target",
+    [
+        {"storage": "file"},
+        {"storage": "file", "disabled": True},
+        {"storage": "csv"},
+        {"storage": "single-csv"},
+    ],
+    ids=["file", "disabled", "csv", "single-csv"],
+)
+def test_scorer_cli_counts_rows_without_caching(spark, tmp_path, capsys, target):
+    """``scored rows: N`` is the input row count on every sink, including
+    a disabled target (no write action runs) and the streaming ``csv``
+    sink (``toLocalIterator``); the scorer leaves no cached data behind."""
     from spark_pipeline_spark.cli import main_scorer
     from spark_pipeline_spark.models import LinearModel
     from spark_pipeline_spark.operators.training import save_model
 
     model_path = str(tmp_path / "linear.bin")
     save_model(LinearModel({"o_totalprice": 0.5}, intercept=1.0), model_path)
+    out = tmp_path / "scored"
     conf = _write_conf(
         tmp_path,
         "score_count.json",
@@ -201,15 +225,40 @@ def test_scorer_cli_counts_rows_without_caching(spark, tmp_path, capsys):
                 "transform-sql": "SELECT o_orderkey AS uid, o_totalprice FROM dataset_temp",
             },
             "model": {"path": model_path, "cols-to-save": ["uid"]},
-            "target": {"storage": "file", "path": str(tmp_path / "scored")},
+            "target": {**target, "path": str(out)},
         },
     )
     persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert main_scorer(["--conf", conf]) == 0
+    assert _returns_within(300, main_scorer, ["--conf", conf]) == 0
     n_src = read_file(spark, f"{SF_SMALL}/orders.parquet").count()
     assert f"scored rows: {n_src}" in capsys.readouterr().out
-    assert read_file(spark, str(tmp_path / "scored")).count() == n_src
+    if target.get("disabled"):
+        assert not out.exists()
+    elif target["storage"] == "file":
+        assert read_file(spark, str(out)).count() == n_src
+    else:
+        assert len(out.read_text().splitlines()) == n_src + 1  # header
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_mover_cli_log_count_on_disabled_target(spark, tmp_path, capsys):
+    """``log-count`` still prints when the target is disabled and nothing
+    is written."""
+    from spark_pipeline_spark.cli import main_mover
+
+    out = tmp_path / "moved"
+    conf = _write_conf(
+        tmp_path,
+        "move_disabled.json",
+        {
+            "source": {"storage": "file", "path": f"{SF_SMALL}/nation.parquet"},
+            "target": {"storage": "file", "path": str(out), "disabled": True},
+            "log-count": True,
+        },
+    )
+    assert _returns_within(300, main_mover, ["--conf", conf]) == 0
+    assert "moved rows: 25" in capsys.readouterr().out
+    assert not out.exists()
 
 
 def test_trainer_cli_end_to_end(spark, tmp_path):

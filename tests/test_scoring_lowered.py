@@ -141,17 +141,22 @@ def test_lowered_equals_python_path(spark, kind, seed):
     assert 0 < nulls < df.count()
 
 
-def test_lowered_equals_python_path_512_features(spark):
-    rng = np.random.default_rng(512)
-    cols = [f"x{i}" for i in range(512)]
+@pytest.mark.parametrize("width, lowered_plan", [(64, True), (512, False)])
+def test_wide_model_equals_python_path(spark, width, lowered_plan):
+    """The widest lowered model (64 features) matches the Python path; a
+    512-feature model takes the Python path itself."""
+    rng = np.random.default_rng(width)
+    cols = [f"x{i}" for i in range(width)]
     x = rng.normal(0, 1, (48, len(cols)))
-    x[3, 100], x[5, 7], x[9, 511] = math.nan, math.inf, -math.inf
+    x[3, 10], x[5, 7], x[9, width - 1] = math.nan, math.inf, -math.inf
     rows = [(f"u{i:02d}", *map(float, x[i])) for i in range(len(x))]
     df = spark.createDataFrame(rows, ["uid", *cols])
     mdl = LogisticModel(random_coef(rng, cols), intercept=0.25)
-    lowered = score(df, mdl, cols_to_save=["uid"])
-    assert_same_scores(lowered, score(df, opaque(mdl), cols_to_save=["uid"]))
-    assert lowered.filter(F.col("target_proba").isNull()).count() >= 1
+    scored = score(df, mdl, cols_to_save=["uid"])
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert ("MapInPandas" not in plan) == lowered_plan
+    assert_same_scores(scored, score(df, opaque(mdl), cols_to_save=["uid"]))
+    assert scored.filter(F.col("target_proba").isNull()).count() >= 1
 
 
 def test_non_numeric_feature_takes_python_path(spark):
